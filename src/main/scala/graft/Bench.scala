@@ -193,6 +193,17 @@ object Bench {
     }
   }
 
+  /** `d` with `digits` decimals and a '.' separator whatever the JVM's
+    * default locale — the `f""` interpolator would print "0,123" under
+    * a comma-decimal locale and break the JSON lines. */
+  private[graft] def fixed(d: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(d))
+
+  /** The compact per-query JSON line: median and reps in seconds. */
+  private[graft] def queryLine(name: String, med: Double,
+                               reps: Seq[Double]): String =
+    s"""{"q":"$name","med":${fixed(med, 3)},"reps":[${reps.map(fixed(_, 3)).mkString(",")}]}"""
+
   def main(args: Array[String]): Unit = {
     // ---- CLI args (override env): --sf <dir|name>, --only a,b|hot10
     var sfOpt: Option[String] = None
@@ -386,9 +397,9 @@ object Bench {
     // timing consumer can't compare an errored run's total against a
     // clean one without seeing the flag (ADVICE r7)
     val rc = if (errors.nonEmpty) 1 else 0
-    val calJson = calib.map(c => f"$c%.4f").mkString("[", ",", "]")
+    val calJson = calib.map(fixed(_, 4)).mkString("[", ",", "]")
     val calProbesJson = calProbeNames.zipWithIndex.map { case (n, p) =>
-      "\"" + n + "\":" + calProbes.map(ps => f"${ps(p)}%.4f")
+      "\"" + n + "\":" + calProbes.map(ps => fixed(ps(p), 4))
         .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val full =
@@ -418,9 +429,7 @@ object Bench {
     // even when the capture window cuts into the stream. Additions
     // only — the full record above and the total line below are
     // byte-identical to previous rounds' emission.
-    runs.foreach { case (name, med, _, ts) =>
-      println(f"""{"q":"$name","med":$med%.3f,"reps":[${ts.map(t => f"$t%.3f").mkString(",")}]}""")
-    }
+    runs.foreach { case (name, med, _, ts) => println(queryLine(name, med, ts)) }
     println(s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},"nerrors":${errors.size},"sf":"$sfDir"}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)

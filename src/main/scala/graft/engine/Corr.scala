@@ -16,10 +16,11 @@ import org.apache.spark.sql.functions._
   * k*(k-1)/2 `corr` expressions (map-side combinable — fine for the
   * reference's <=100-column frames; for very wide frames use
   * `ml.stat.Correlation` on an assembled vector, which computes the
-  * Gramian once). Spearman's rank prestep is the distributed
-  * [[Reductions.rankStatsTable]] join — value-counts aggregate + prefix
-  * sum over the counts table, one join-back per column, no global
-  * window at any scale. Kendall (the reference's numba kernel is O(n²)
+  * Gramian once). Spearman's rank prestep probes exact value counts
+  * once and attaches midranks map-side through the
+  * [[graft.functions.MidrankLookup]] kernel (fixed-bucket windows for
+  * columns too wide for the broadcast gate) — no global window at any
+  * scale. Kendall (the reference's numba kernel is O(n²)
   * pairwise, `_numba.py:106-146`) has three tiers here: bounded-collect
   * Knight ([[kendallFast]]), sampled ([[kendallApprox]]), and the
   * unbounded exact grid decomposition ([[kendallDistributed]]).
@@ -39,8 +40,8 @@ object Corr {
   def kendallCollectMaxRows(k: Int, budgetBytes: Long = 256L << 20): Long =
     budgetBytes / (64L + 48L * k.max(1))
 
-  /** Key-NDV bound for [[corrMatrixBy]]'s grouped-probe regime (r15):
-    * at or below it, ONE grouped probe pass collects every column's
+  /** Key-NDV bound for the grouped-probe step of [[withGroupMidranks]]'
+    * probe sequence: at or below it, ONE grouped probe pass collects every column's
     * per-key exact histograms / fixed-bucket counts (collect memory is
     * bounded at ~cols × 2 × broadcast-gate entries by the per-key cap)
     * and every rank attachment is driver-built; above it, the in-plan
@@ -63,12 +64,14 @@ object Corr {
     * long form (key, c1, c2, corr), upper triangle incl. the diagonal.
     * pearson: ONE grouped aggregate carries all k(k+1)/2 `corr` cells —
     * map-side-combinable co-moments, one shuffle on the group key.
-    * spearman: each column midranked WITHIN its group via
-    * [[Reductions.withMidrankBy]] — (key, value-quantile-bucket)
-    * windows, NOT `Window.partitionBy(key)`, so a low-cardinality group
-    * key (l_returnflag: 3 values) never serializes n/3 of the corpus
-    * through one sort task; all columns' bucket cuts come from ONE
-    * approxQuantile probe. NULL cells midrank to NULL and are pairwise-
+    * spearman: each column midranked WITHIN its group by
+    * [[withGroupMidranks]] — on inputs the broadcast gate admits, ONE
+    * exact (key, column, value) counts probe and the
+    * [[graft.functions.MidrankLookup]] kernel in one projection (no
+    * join, no window); wider columns take (key, fixed-bucket) windows,
+    * never `Window.partitionBy(key)`, so a low-cardinality group key
+    * (l_returnflag: 3 values) never serializes n/3 of the corpus
+    * through one sort task. NULL cells midrank to NULL and are pairwise-
     * masked by the correlation (the old group-window form ranked nulls
     * first, polluting the coefficient). Like [[spearmanMatrix]], ranks
     * are computed per COLUMN (not per pair): on null-laden data this is
@@ -87,124 +90,8 @@ object Corr {
     val src = method match {
       case "pearson" => df
       case "spearman" =>
-        val spark = df.sparkSession
-        // floor 2: a defaultParallelism==1 session would degenerate the
-        // fallback bucket count; an extra bucket is placement-only
-        val n = math.max(spark.sparkContext.defaultParallelism, 2)
-        // The gate is sized from the session's
-        // autoBroadcastJoinThreshold (VERDICT r14 item 6) so no stats
-        // broadcast can outgrow what the session would broadcast.
-        val gate = Reductions.groupRankStatsMaxRows(spark)
-        // probe job 1: NDV gates only (key + every column)
-        val probeAggs =
-          approx_count_distinct(col(key)).as("__ndk") +:
-          cols.zipWithIndex.map { case (c, i) =>
-            approx_count_distinct(col(c)).as(s"__nd$i") }
-        val st = df.agg(probeAggs.head, probeAggs.tail: _*).collect()(0)
-        val ndk = st.getLong(st.fieldIndex("__ndk"))
-        def ndc(i: Int): Long = st.getLong(st.fieldIndex(s"__nd$i"))
-        // exact double round-trip: the grouped probe histograms values
-        // cast to double, so its stats only equal raw-value grouping
-        // when the cast is injective
-        def castExact(c: String): Boolean = df.schema(c).dataType match {
-          case org.apache.spark.sql.types.DoubleType |
-               org.apache.spark.sql.types.FloatType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.ByteType => true
-          case _ => false
-        }
-        val ranked =
-          if (ndk <= GroupedProbeMaxKeys && cols.forall(castExact)) {
-            // probe job 2 (r15): ONE grouped pass collects, per key and
-            // per column, the exact value histogram (capped so the
-            // whole collect stays within the broadcast gate), the exact
-            // fixed-bucket counts ([[graft.functions.SortableBucket]]),
-            // and the NaN count. EVERY column's rank attachment is then
-            // driver-built — per-(key,value) stats join or per-(key,
-            // bucket) offsets + window — with ZERO per-column in-plan
-            // aggregate subtrees: the former plan re-evaluated the
-            // (key, c) source once per column for the stats counts and
-            // once for the window offsets (guide §2.4: remove the
-            // passes outright), plus a percentile sketch per column in
-            // the probe.
-            val capPerKey = math.max(16L, gate / math.max(ndk, 1L)).toInt
-            def fb(c: Column) = graft.functions.SortableBucket
-              .sortableBucket(c.cast("double")).cast("double")
-            val hAggs = cols.zipWithIndex.flatMap { case (c, i) => Seq(
-              Reductions.boundedHistogram(col(c).cast("double"), capPerKey)
-                .as(s"__h$i"),
-              Reductions.boundedHistogram(fb(col(c)), capPerKey)
-                .as(s"__b$i"),
-              count(when(isnan(col(c).cast("double")), 1)).as(s"__nan$i")) }
-            val rowsK = df.groupBy(col(key).as("__k"))
-              .agg(hAggs.head, hAggs.tail: _*).collect().toSeq
-            def histsOf(fld: String): Seq[(Any, Seq[(Double, Long)])] =
-              rowsK.map { r =>
-                val f = r.fieldIndex(fld)
-                (r.get(0), if (r.isNullAt(f)) null
-                  else r.getMap[Double, Long](f).toSeq)
-              }
-            cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-              val out = s"__mr_$c"
-              val vh = histsOf(s"__h$i"); val bh = histsOf(s"__b$i")
-              val nans = rowsK.map(r =>
-                r.getLong(r.fieldIndex(s"__nan$i")))
-              val vhOk = vh.forall(_._2 != null) &&
-                vh.map(_._2.size).sum + nans.count(_ > 0) <= gate
-              val bhOk = bh.forall(_._2 != null) &&
-                bh.map(_._2.size).sum <= gate && {
-                  // window balance: no single (key, bucket) partition
-                  // may dominate (same 20% bound as the ungrouped path)
-                  val all = bh.flatMap(_._2.map(_._2))
-                  val total = all.sum
-                  total == 0 || all.max.toDouble / total <= 0.2
-                }
-              if (vhOk) {
-                val stats = Reductions.rankStatsFromGroupCounts(spark,
-                  d.schema(key).dataType,
-                  vh.zip(nans).map { case ((k, h), nc) => (k, h, nc) })
-                d.join(stats, col(key) === col("__gk") &&
-                    col(c) === col("__gv"), "left")
-                  .withColumn(out, when(col(c).isNotNull,
-                    col("__gb") + (col("__gc") + 1) / 2.0))
-                  .drop("__gk", "__gv", "__gc", "__gb")
-              } else if (bhOk)
-                Reductions.withGroupMidrankFixed(d, key, c, out, bh)
-              else Reductions.withMidrankBy(d, key, c, out, n,
-                statsSource = Some(df.select(col(key), col(c))))
-            }.select(col(key) +: cols.map(c => col(s"__mr_$c").as(c)): _*)
-          } else {
-            // high-NDV-key regime: the per-column in-plan machinery
-            // (grouped stats aggregate / bucketed-window offsets) stays
-            // — those subtrees are what keeps this regime driver-safe.
-            // Window-fallback columns get their quantile cuts from ONE
-            // batched approxQuantile job (the old probe carried a
-            // percentile sketch for every column on every call).
-            val need = cols.zipWithIndex
-              .filter { case (_, i) => ndk * ndc(i) > gate }
-            val cutsByCol: Map[Int, Array[Double]] =
-              if (need.isEmpty) Map.empty
-              else {
-                val probs = (1 until n).map(_.toDouble / n).toArray
-                val named = need.map { case (c, i) => (s"__qc$i", i) }
-                val slim = df.select(need.map { case (c, i) =>
-                  col(c).cast("double").as(s"__qc$i") }: _*)
-                val qs = slim.stat.approxQuantile(
-                  named.map(_._1).toArray, probs, 0.01)
-                named.map(_._2).zip(qs.map(_.distinct.sorted)).toMap
-              }
-            cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-              if (ndk * ndc(i) <= gate)
-                Reductions.withGroupRankStats(d, key, c, s"__mr_$c",
-                  statsSource = Some(df.select(col(key), col(c))))
-              else Reductions.withMidrankBy(d, key, c, s"__mr_$c", n,
-                knownCuts = Some(cutsByCol(i)),
-                statsSource = Some(df.select(col(key), col(c))))
-            }.select(col(key) +: cols.map(c => col(s"__mr_$c").as(c)): _*)
-          }
-        ranked
+        withGroupMidranks(df, key, cols)
+          .select(col(key) +: cols.map(c => col(s"__mr_$c").as(c)): _*)
       case "kendall" =>
         return kendallMatrixBy(df, key, cols,
             maxGroupRows = kendallMaxGroupRows, minPeriods = minPeriods)
@@ -228,6 +115,209 @@ object Corr {
         s"THEN `${a}__$b` END" }
       .mkString(s"stack(${pairs.size}, ", ", ", ") as (c1, c2, corr)")
     one.select(col(key), expr(stacked))
+  }
+
+  /** Every column's within-group midrank, attached to `df` as
+    * `__mr_<c>` (the spearman prestep of [[corrMatrixBy]]; null cells
+    * rank null, NaN ranks greatest, a null key is its own group).
+    *
+    * Two probe routes, chosen from the input's plan-statistics row
+    * estimate against the broadcast gate
+    * ([[Reductions.groupRankStatsMaxRows]]); `oneShot` forces a route
+    * (tests):
+    *   - ONE-SHOT (estimate ≤ gate, so no column's (key, value) table
+    *     is expected to outgrow the gate): one codegen hash aggregate
+    *     (grouping sets over (key, column)) counts every exact
+    *     (key, column, value) triple, collected under k × gate rows.
+    *     A column with ≤ gate rows ranks through the
+    *     [[graft.functions.MidrankLookup]] kernel; a larger one gets
+    *     its exact per-(key, fixed-bucket) counts summed on the driver
+    *     ([[Reductions.withGroupMidrankFixed]]). A collect that
+    *     overflows k × gate (the estimate was wrong) falls back to the
+    *     sequence below.
+    *   - SEQUENCE (bigger inputs): an approximate-NDV probe; at or
+    *     below [[GroupedProbeMaxKeys]] keys, ONE grouped bounded-
+    *     histogram probe returns per-key exact value and fixed-bucket
+    *     counts (kernel, else fixed-bucket window, else
+    *     [[Reductions.withMidrankBy]]); above it, the in-plan regimes
+    *     ([[Reductions.withGroupRankStats]] / [[Reductions.withMidrankBy]]).
+    * Regimes are chosen per column. Kernel columns need a hashable key
+    * type and a value type whose double cast is injective; a long
+    * column with a probed |value| ≥ 2^53 never takes the kernel. */
+  private[graft] def withGroupMidranks(df: DataFrame, key: String,
+      cols: Seq[String], oneShot: Option[Boolean] = None): DataFrame = {
+    val spark = df.sparkSession
+    val gate = Reductions.groupRankStatsMaxRows(spark)
+    val keyType = df.schema(key).dataType
+    val kernelOk = graft.functions.MidrankTable.keyTypeSupported(keyType) &&
+      cols.forall(c => Reductions.castsExactly(df.schema(c).dataType))
+    val probed =
+      if (kernelOk && oneShot.getOrElse(
+          Reductions.estimatedRows(df.select(key, cols: _*)) <= gate))
+        groupValueCounts(df, key, cols, gate)
+      else None
+    probed match {
+      case Some(hists) =>
+        attachGroupRanks(df, key, cols, gate, cols.indices.map { i =>
+          val h = hists(i)
+          val rows = h.map(_._2.size).sum
+          if (rows <= gate && Reductions.exactAsDouble(
+              df.schema(cols(i)).dataType, h.iterator.flatMap(_._2.map(_._1))))
+            Kernel(h)
+          else if (rows <= gate) QuantileWindow
+          else FixedBuckets(h.map { case (k, vs) => (k, vs
+            .groupBy(v => graft.functions.SortableBucket.bucketOf(v._1, 18))
+            .map { case (b, bs) => (b.toDouble, bs.map(_._2).sum) }.toSeq) })
+        })
+      case None => probeSequence(df, key, cols, gate, kernelOk)
+    }
+  }
+
+  /** Rank regime of one column, decided on the driver from a probe. */
+  private sealed trait GroupRankPlan
+  private final case class Kernel(perKey: Seq[(Any, Seq[(Double, Long)])])
+    extends GroupRankPlan
+  private final case class FixedBuckets(perKey: Seq[(Any, Seq[(Double, Long)])])
+    extends GroupRankPlan
+  private case object QuantileWindow extends GroupRankPlan
+  private case object InPlanStats extends GroupRankPlan
+
+  /** The one-shot probe: exact (key, value) counts of every column in
+    * ONE hash aggregate (an Expand of k grouping sets), or None when
+    * the result would exceed `k × gate` rows. */
+  private def groupValueCounts(df: DataFrame, key: String,
+      cols: Seq[String], gate: Long)
+    : Option[IndexedSeq[Seq[(Any, Seq[(Double, Long)])]]] = {
+    val k = cols.size
+    val vs = cols.indices.map(i => col(s"__v$i"))
+    val slim = df.select(col(key).as("__k") +: cols.zipWithIndex.map {
+      case (c, i) => col(c).cast("double").as(s"__v$i") }: _*)
+    val cap = math.min(k * gate, Int.MaxValue - 1L)
+    val rows = slim
+      .groupingSets(vs.map(v => Seq(col("__k"), v)), col("__k") +: vs: _*)
+      .agg(grouping_id().as("__gid"), count(lit(1)).as("__n"))
+      .limit((cap + 1).toInt).collect()
+    if (rows.length > cap) None
+    else {
+      // grouping_id sets a bit per column NOT in the set, first column
+      // most significant: set i groups (__k, __v<i>)
+      val setOf = cols.indices.map(i =>
+        ((1L << k) - 1 - (1L << (k - 1 - i))) -> i).toMap
+      val by = rows.groupBy(r => setOf(r.getAs[Number](k + 1).longValue))
+      Some(cols.indices.map { i =>
+        by.getOrElse(i, Array.empty).filter(!_.isNullAt(1 + i))
+          .groupBy(_.get(0)).toSeq.map { case (kv, rs) =>
+            (kv, rs.toSeq.map(r => (r.getDouble(1 + i), r.getLong(k + 2))))
+          }
+      })
+    }
+  }
+
+  /** The probe sequence for inputs too big for the one-shot probe:
+    * NDV gates, then (few keys) one grouped bounded-histogram probe, or
+    * (many keys) the per-column in-plan regimes. */
+  private def probeSequence(df: DataFrame, key: String, cols: Seq[String],
+      gate: Long, kernelOk: Boolean): DataFrame = {
+    // probe job 1: NDV gates only (key + every column)
+    val probeAggs =
+      approx_count_distinct(col(key)).as("__ndk") +:
+      cols.zipWithIndex.map { case (c, i) =>
+        approx_count_distinct(col(c)).as(s"__nd$i") }
+    val st = df.agg(probeAggs.head, probeAggs.tail: _*).collect()(0)
+    val ndk = st.getLong(st.fieldIndex("__ndk"))
+    def ndc(i: Int): Long = st.getLong(st.fieldIndex(s"__nd$i"))
+    if (ndk <= GroupedProbeMaxKeys && kernelOk) {
+      // probe job 2: ONE grouped pass collects, per key and per column,
+      // the exact value histogram (capped so the whole collect stays
+      // within the broadcast gate), the exact fixed-bucket counts
+      // ([[graft.functions.SortableBucket]]) and the NaN count
+      val capPerKey = math.max(16L, gate / math.max(ndk, 1L)).toInt
+      def fb(c: Column) = graft.functions.SortableBucket
+        .sortableBucket(c.cast("double")).cast("double")
+      val hAggs = cols.zipWithIndex.flatMap { case (c, i) => Seq(
+        Reductions.boundedHistogram(col(c).cast("double"), capPerKey)
+          .as(s"__h$i"),
+        Reductions.boundedHistogram(fb(col(c)), capPerKey)
+          .as(s"__b$i"),
+        count(when(isnan(col(c).cast("double")), 1)).as(s"__nan$i")) }
+      val rowsK = df.groupBy(col(key).as("__k"))
+        .agg(hAggs.head, hAggs.tail: _*).collect().toSeq
+      def histsOf(fld: String): Seq[(Any, Seq[(Double, Long)])] =
+        rowsK.map { r =>
+          val f = r.fieldIndex(fld)
+          (r.get(0), if (r.isNullAt(f)) null
+            else r.getMap[Double, Long](f).toSeq)
+        }
+      attachGroupRanks(df, key, cols, gate, cols.indices.map { i =>
+        val vh = histsOf(s"__h$i"); val bh = histsOf(s"__b$i")
+        val nans = rowsK.map(r => r.getLong(r.fieldIndex(s"__nan$i")))
+        val vhOk = vh.forall(_._2 != null) &&
+          vh.map(_._2.size).sum + nans.count(_ > 0) <= gate &&
+          Reductions.exactAsDouble(df.schema(cols(i)).dataType,
+            vh.iterator.flatMap(_._2.map(_._1)))
+        if (vhOk) Kernel(vh.zip(nans).map { case ((k, h), nc) =>
+          (k, if (nc > 0) h :+ (Double.NaN -> nc) else h) })
+        else if (bh.forall(_._2 != null)) FixedBuckets(bh)
+        else QuantileWindow
+      })
+    } else {
+      // high-NDV-key regime: the per-column in-plan machinery
+      // (grouped stats aggregate / bucketed-window offsets) stays —
+      // those subtrees are what keeps this regime driver-safe.
+      attachGroupRanks(df, key, cols, gate, cols.indices.map { i =>
+        if (ndk * ndc(i) <= gate) InPlanStats else QuantileWindow })
+    }
+  }
+
+  /** Attach every column's midrank by its regime: ALL kernel columns in
+    * one projection, then the window regimes. Window-fallback columns
+    * get their quantile cuts from ONE batched approxQuantile job. */
+  private def attachGroupRanks(df: DataFrame, key: String,
+      cols: Seq[String], gate: Long, plans: Seq[GroupRankPlan]): DataFrame = {
+    val spark = df.sparkSession
+    // floor 2: a defaultParallelism==1 session would degenerate the
+    // fallback bucket count; an extra bucket is placement-only
+    val n = math.max(spark.sparkContext.defaultParallelism, 2)
+    val keyType = df.schema(key).dataType
+    val kernels = cols.zip(plans).collect { case (c, Kernel(perKey)) =>
+      graft.functions.MidrankLookup.midrankBy(spark, col(key), keyType,
+        col(c), perKey).as(s"__mr_$c") }
+    val withKernels =
+      if (kernels.isEmpty) df else df.select(col("*") +: kernels: _*)
+    // window balance: no single (key, bucket) partition may dominate
+    // (same 20% bound as the ungrouped path)
+    def bucketsOk(bh: Seq[(Any, Seq[(Double, Long)])]) =
+      bh.map(_._2.size).sum <= gate &&
+        Reductions.fixedBucketsBalanced(bh.flatMap(_._2))
+    val windowed = cols.indices.filter(i => plans(i) match {
+      case QuantileWindow => true
+      case FixedBuckets(bh) => !bucketsOk(bh)
+      case _ => false
+    })
+    val cuts: Map[Int, Array[Double]] =
+      if (windowed.isEmpty) Map.empty
+      else {
+        val probs = (1 until n).map(_.toDouble / n).toArray
+        val slim = df.select(windowed.map(i =>
+          col(cols(i)).cast("double").as(s"__qc$i")): _*)
+        val qs = slim.stat.approxQuantile(
+          windowed.map(i => s"__qc$i").toArray, probs, 0.01)
+        windowed.zip(qs.map(_.distinct.sorted)).toMap
+      }
+    val slim = df.select(col(key) +: cols.map(col): _*)
+    cols.zipWithIndex.foldLeft(withKernels) { case (d, (c, i)) =>
+      val out = s"__mr_$c"
+      plans(i) match {
+        case Kernel(_) => d
+        case InPlanStats =>
+          Reductions.withGroupRankStats(d, key, c, out,
+            statsSource = Some(slim))
+        case FixedBuckets(bh) if bucketsOk(bh) =>
+          Reductions.withGroupMidrankFixed(d, key, c, out, bh)
+        case _ => Reductions.withMidrankBy(d, key, c, out, n,
+          knownCuts = Some(cuts(i)), statsSource = Some(slim))
+      }
+    }
   }
 
   /** pandas `groupby(key).corr(method='kendall')` — per-group tau-b
@@ -380,7 +470,7 @@ object Corr {
   /** Spearman rho for one pair: pearson over average ranks. ONE probe
     * pass fetches, per column, the EXACT value counts if the column is
     * low-cardinality (bounded histogram — the whole per-value rank
-    * prestep in a single pass, broadcast join-back) AND exact counts
+    * prestep in a single pass, midrank kernel lookup) AND exact counts
     * of the FIXED order-preserving bucket
     * ([[graft.functions.SortableBucket]], r15): a continuous column's
     * midrank window gets its per-bucket offsets straight from the
@@ -419,9 +509,10 @@ object Corr {
     def histOf(i: Int): Seq[(Double, Long)] =
       if (st.isNullAt(i)) null else st.getMap[Double, Long](i).toSeq
     // width from the probe's own counts — the pairwise-complete base
-    // has no nulls, so any surviving histogram sums to the row count;
-    // a count() job only runs if every histogram poisoned (r15)
-    lazy val probedRows: Long = (0 until 4).iterator
+    // has no nulls, so a surviving BUCKET histogram (indexes 2-3; NaN
+    // has a bucket, while the value histograms skip NaN) sums to the
+    // row count; a count() job only runs if both poisoned (r15)
+    lazy val probedRows: Long = (2 until 4).iterator
       .map(st.getMap[Double, Long](_))
       .collectFirst { case m if m != null => m.values.sum }
       .getOrElse(base.count())
@@ -432,27 +523,26 @@ object Corr {
         // ranked frame carries 2 values + 2 ranks + bucket id + offset
         Reductions.sortWidth(probedRows, 6, session)
       }
-    // Low-cardinality side: driver-built rank-stats LocalRelation,
-    // broadcast join — no shuffle of the frame, no second scan.
-    // Continuous side: fixed-bucket midrank window fed by the probe's
-    // exact bucket counts. Both exact.
+    // Low-cardinality side: the midrank kernel over the probed
+    // histogram — no shuffle of the frame, no join, no second scan (the
+    // histogram skips NaN, so NaN ranks null as it did under the
+    // former stats join). Continuous side: fixed-bucket midrank window
+    // fed by the probe's exact bucket counts. Both exact.
     def rankCol(in: DataFrame, c: String, out: String,
-                hist: Seq[(Double, Long)], bcnt: Seq[(Double, Long)],
-                pfx: String): DataFrame =
-      if (hist != null) {
-        val stt = Reductions.rankStatsFromCounts(spark, hist, pfx)
-        in.join(stt, col(c) === col(s"${pfx}v"), "left")
-          .withColumn(out, col(s"${pfx}_before") + (col(s"${pfx}_cnt") + 1) / 2.0)
-          .drop(s"${pfx}v", s"${pfx}_cnt", s"${pfx}_before", s"${pfx}_dense")
-      } else if (Reductions.fixedBucketsBalanced(bcnt))
+                hist: Seq[(Double, Long)], bcnt: Seq[(Double, Long)])
+      : DataFrame =
+      if (hist != null)
+        in.withColumn(out, graft.functions.MidrankLookup.midrank(spark,
+          when(!isnan(col(c)), col(c)), hist))
+      else if (Reductions.fixedBucketsBalanced(bcnt))
         Reductions.withMidrankFixed(in, c, out, bcnt, width = sortW)
       else Reductions.withMidrank(in, c, out,
         buckets = if (sortW > 0) math.max(dp, math.min(2 * sortW, 4096))
                   else dp,
         statsSource = Some(base), width = sortW)
     val ranked = rankCol(
-      rankCol(base, "__a", "ra", histOf(0), histOf(2), "__ra"),
-      "__b", "rb", histOf(1), histOf(3), "__rb")
+      rankCol(base, "__a", "ra", histOf(0), histOf(2)),
+      "__b", "rb", histOf(1), histOf(3))
     ranked.agg(Core.safeCorr(col("ra"), col("rb")).as("spearman"))
   }
 
@@ -465,7 +555,7 @@ object Corr {
     * ONE stats job for ALL columns (the batched form of [[spearman]]'s
     * probe): a single aggregate computes every column's bounded exact
     * histogram AND its quantile cut points in one pass. Each column is
-    * then ranked ONCE — broadcast rank-stats join when low-cardinality,
+    * then ranked ONCE — midrank kernel lookup when low-cardinality,
     * deterministic-bucket midrank window otherwise — and one final
     * aggregate evaluates all k(k-1)/2 rank correlations. Total: 1 probe
     * job + 1 main job, independent of k.
@@ -493,7 +583,7 @@ object Corr {
     * pairs.
     *
     * The probe computes, per column, a bounded exact value histogram
-    * (low-NDV columns rank via a broadcast stats join — no shuffle of
+    * (low-NDV columns rank via the midrank kernel — no shuffle of
     * the frame) AND exact counts of the FIXED order-preserving bucket
     * ([[graft.functions.SortableBucket]], r15): a high-NDV column's
     * midrank window gets its per-bucket offsets straight from the
@@ -566,14 +656,10 @@ object Corr {
       val bcnt: Seq[(Double, Long)] =
         if (st.isNullAt(bi)) null else st.getMap[Double, Long](bi).toSeq
       ranked =
-        if (hist != null) {
-          val stt = Reductions.rankStatsFromCounts(spark, hist, s"__p$i")
-          ranked.join(stt, col(s"__c$i") === col(s"__p${i}v"), "left")
-            .withColumn(s"__r$i",
-              col(s"__p${i}_before") + (col(s"__p${i}_cnt") + 1) / 2.0)
-            .drop(s"__p${i}v", s"__p${i}_cnt", s"__p${i}_before",
-              s"__p${i}_dense")
-        } else if (Reductions.fixedBucketsBalanced(bcnt)) {
+        if (hist != null)
+          ranked.withColumn(s"__r$i", graft.functions.MidrankLookup
+            .midrank(spark, col(s"__c$i"), hist))
+        else if (Reductions.fixedBucketsBalanced(bcnt)) {
           // driver-built per-bucket offsets (exact counts from the
           // probe) broadcast back; the window sorts within buckets
           // only. A column too concentrated for fixed buckets (>20% of
@@ -648,8 +734,8 @@ object Corr {
     * aggregate pass (Spark's `corr` masks null pairs natively; the
     * masked histograms are the batched form of [[spearman]]'s per-pair
     * probe — map-side combinable, no shuffle of the frame). Main: each
-    * masked midrank is attached via a broadcast rank-stats join built
-    * from its histogram (the frame is never shuffled or sorted) and one
+    * masked midrank is attached via the midrank kernel over its
+    * histogram (the frame is never shuffled or sorted) and one
     * final aggregate evaluates every rank correlation. A pair whose
     * masked column exceeds the histogram's cardinality bound (65536
     * distinct) falls back to the single-pair [[spearman]] —
@@ -693,14 +779,11 @@ object Corr {
         var ranked = base
         batched.flatMap { case (i, j) => Seq((i, j), (j, i)) }
           .foreach { case (i, j) =>
-            val p = s"__p${i}_$j"
-            ranked = ranked
-              .join(Reductions.rankStatsFromCounts(spark, histOf(i, j), p),
-                col(s"__c$i") === col(s"${p}v"), "left")
-              .withColumn(s"__r${i}_$j",
-                when(col(s"__c$j").isNotNull,
-                  col(s"${p}_before") + (col(s"${p}_cnt") + 1) / 2.0))
-              .drop(s"${p}v", s"${p}_cnt", s"${p}_before", s"${p}_dense")
+            // the kernel sees exactly the masked input its histogram
+            // counted: rows outside the pair's mask rank null
+            ranked = ranked.withColumn(s"__r${i}_$j",
+              graft.functions.MidrankLookup.midrank(spark,
+                when(col(s"__c$j").isNotNull, col(s"__c$i")), histOf(i, j)))
           }
         val cellAggs = batched.map { case (i, j) =>
           Core.safeCorr(col(s"__r${i}_$j"), col(s"__r${j}_$i")).as(s"s${i}_$j") }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, ShortType}
 
 /** Full-frame reductions and per-column statistics.
   *
@@ -107,8 +109,9 @@ object Reductions {
     * column: min-rank + (ties-1)/2.
     *
     * SMALL-FRAME form: the partition-less window serializes into one
-    * task. For whole-frame rank at scale use [[withRankAvg]] /
-    * [[withRankStats]] (distributed stats-join, same semantics).
+    * task. For whole-frame rank at scale use [[withRankAvg]] (one
+    * probe, then the midrank kernel or a distributed stats join; same
+    * semantics).
     *
     * na_option: 'keep' (default) leaves null ranks null and `pct`
     * divides by the non-null count; 'top'/'bottom' rank the null block
@@ -139,126 +142,139 @@ object Reductions {
     }
   }
 
-  /** Per-VALUE rank statistics table for column `c` — the shared prestep
-    * of the distributed ungrouped rank family. Output columns (keyed by
-    * `<p>v`, the distinct value):
-    *   - `<p>_cnt`    tie-group size of the value
-    *   - `<p>_before` count of values strictly before it (in `ascending`
-    *                  order) — min rank = before+1, max = before+cnt,
-    *                  average = before+(cnt+1)/2
-    *   - `<p>_dense`  1-based dense rank of the value
+  /** pandas `rank(method='average', pct, na_option)` over the WHOLE
+    * frame, scale-safe (no partition-less window). `outs` is
+    * (outputColumn, pct?) so average rank and its pct form share one
+    * probe. Semantics identical to [[rankAvg]].
     *
-    * Shape: ONE probe job — the value-counts aggregate (map-side
-    * combinable), sorted, with `limit(threshold+1)` bounding what can
-    * reach the driver. Then:
-    *   - counts ≤ `smallThreshold` (the common case: categorical /
-    *     low-cardinality keys): prefix sums run on the driver over the
-    *     bounded sorted counts and ship back as a broadcast
-    *     LocalRelation for the join-back. Scale-safe — the frame itself
-    *     never serializes, only its (bounded) distinct values do.
-    *   - counts above threshold (near-unique doubles at 100 TB): the
-    *     two-pass [[Cumulative.globalCumsumMulti]] range-partitioned
-    *     prefix sum over the re-aggregated counts — every stage
-    *     partitions, nothing driver-sized.
+    * ONE probe job: the exact per-value counts (the null group's count
+    * included — it is the top/bottom total), sorted and bounded by
+    * `limit(smallThreshold + 2)` so at most that many rows reach the
+    * driver. Then:
+    *   - ≤ `smallThreshold` distinct values, numeric column whose
+    *     double cast is injective: ranks attach map-side through the
+    *     [[graft.functions.MidrankLookup]] kernel over the probed
+    *     counts; totals are driver literals — no join, no cross join;
+    *   - ≤ `smallThreshold`, any other type (strings, longs beyond
+    *     2^53): the same counts as a broadcast stats LocalRelation,
+    *     joined back on the value;
+    *   - above it (near-unique values at scale): the two-pass
+    *     [[Cumulative.globalCumsumMulti]] range-partitioned prefix sum
+    *     over the re-aggregated counts, joined back, plus a broadcast
+    *     1-row total — every stage partitions, nothing driver-sized.
     * Ties never straddle partitions because the prefix sum runs
     * per-value. */
-  def rankStatsTable(df: DataFrame, c: String, ascending: Boolean = true,
-                     prefix: String = "__rk",
-                     smallThreshold: Int = 1000000,
-                     weight: Option[Column] = None): DataFrame = {
-    val spark = df.sparkSession
-    val key = s"${prefix}v"
-    // `weight` lets pre-aggregated (value, multiplicity) inputs reuse
-    // this path: the tie-group size is then sum(weight), not count(*).
-    val cntAgg = weight.map(sum).getOrElse(count(lit(1)))
-    val cnts = df.filter(col(c).isNotNull)
-      .groupBy(col(c).as(key))
-      .agg(cntAgg.cast("double").as(s"${prefix}_cnt"))
-    val ord = if (ascending) col(key).asc else col(key).desc
-    val sorted = cnts.orderBy(ord).limit(smallThreshold + 1).collect()
-    if (sorted.length <= smallThreshold) {
-      var before = 0.0
-      val rows = new Array[org.apache.spark.sql.Row](sorted.length)
-      var i = 0
-      while (i < sorted.length) {
-        val r = sorted(i)
-        val cnt = r.getDouble(1)
-        rows(i) = org.apache.spark.sql.Row(r.get(0), cnt, before, (i + 1).toDouble)
-        before += cnt
-        i += 1
-      }
-      import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-      val schema = StructType(Seq(
-        cnts.schema.head, // key field keeps the original value type
-        StructField(s"${prefix}_cnt", DoubleType),
-        StructField(s"${prefix}_before", DoubleType),
-        StructField(s"${prefix}_dense", DoubleType)))
-      broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema))
-    } else {
-      // Large path re-runs the counts aggregate (one extra map-side-
-      // combinable pass) into the distributed prefix sum; checkpoint so
-      // the two passes inside globalCumsumMulti share one evaluation.
-      // Counts/dense indices ride as Double (rank callers cast back to
-      // long): exact only below 2^53 rows / distinct values — fine for
-      // row counts, not for 64-bit id-like payloads.
-      val ck = cnts.localCheckpoint()
-      Cumulative.globalCumsumMulti(ck.withColumn("__one", lit(1.0)),
-          Seq(ord),
-          Seq(col(s"${prefix}_cnt") -> s"${prefix}_cum",
-              col("__one") -> s"${prefix}_dense"))
-        .drop("__one")
-        .withColumn(s"${prefix}_before",
-          col(s"${prefix}_cum") - col(s"${prefix}_cnt"))
-        .drop(s"${prefix}_cum")
-    }
-  }
-
-  /** DISTRIBUTED global rank statistics — the 100 TB path for ungrouped
-    * rank, replacing the `Window.orderBy()`-without-partitionBy form
-    * (which serializes the whole frame into one task). Joins each row to
-    * the [[rankStatsTable]] of its column on the value; null values
-    * left-join to null stats; callers apply na_option. */
-  def withRankStats(df: DataFrame, c: String, ascending: Boolean = true,
-                    prefix: String = "__rk"): DataFrame = {
-    val st = rankStatsTable(df, c, ascending, prefix)
-    df.join(st, df(c) === col(s"${prefix}v"), "left").drop(s"${prefix}v")
-  }
-
-  /** pandas `rank(method='average', pct, na_option)` over the WHOLE
-    * frame, scale-safe: adds the requested rank columns via
-    * [[withRankStats]] + a broadcast 1-row total. `outs` is
-    * (outputColumn, pct?) so average rank and its pct form share one
-    * stats join. Semantics identical to [[rankAvg]]. */
   def withRankAvg(df: DataFrame, c: String, outs: Seq[(String, Boolean)],
                   ascending: Boolean = true,
-                  naOption: String = "keep"): DataFrame = {
-    val st0 = rankStatsTable(df, c, ascending)
-    // the non-null count is the sum of the (tiny) per-value counts — no
-    // second scan of the frame; only top/bottom need the all-rows count
-    val nVal = st0.agg(coalesce(sum(col("__rk_cnt")), lit(0.0)).as("__n_val"))
-    val tot = if (naOption == "keep") nVal
-      else df.agg(count(lit(1)).cast("double").as("__n_all")).crossJoin(nVal)
-    val st = df.join(st0, df(c) === col("__rkv"), "left").drop("__rkv")
-      .crossJoin(broadcast(tot))
-    val nNull = col("__n_all") - col("__n_val")
-    val base = col("__rk_before") + (col("__rk_cnt") + 1) / 2.0
+                  naOption: String = "keep",
+                  smallThreshold: Int = 1000000): DataFrame = {
+    val spark = df.sparkSession
     val v = col(c)
+    val cnts = df.groupBy(v.as("__rkv"))
+      .agg(count(lit(1)).cast("double").as("__rk_cnt"))
+    val ord = if (ascending) col("__rkv").asc else col("__rkv").desc
+    val probed = cnts
+      .orderBy(if (ascending) col("__rkv").asc_nulls_last
+               else col("__rkv").desc_nulls_last)
+      .limit(smallThreshold + 2).collect()
+    val (nulls, valued) = probed.partition(_.isNullAt(0))
+    val dt = df.schema(c).dataType
+    lazy val asDouble = valued.map(r => r.get(0) match {
+      case n: Number => n.doubleValue
+    })
+    val joinedRank = col("__rk_before") + (col("__rk_cnt") + 1) / 2.0
+    val (ranked, base, nVal, nAll) =
+      if (valued.length > smallThreshold) {
+        // Large path re-runs the counts aggregate (one extra map-side-
+        // combinable pass) into the distributed prefix sum; checkpoint
+        // so the two passes inside globalCumsumMulti share one
+        // evaluation. Counts/dense indices ride as Double: exact only
+        // below 2^53 rows / distinct values.
+        val ck = cnts.filter(col("__rkv").isNotNull).localCheckpoint()
+        val st0 = Cumulative.globalCumsumMulti(
+            ck.withColumn("__one", lit(1.0)), Seq(ord),
+            Seq(col("__rk_cnt") -> "__rk_cum", col("__one") -> "__rk_dense"))
+          .drop("__one", "__rk_dense")
+          .withColumn("__rk_before", col("__rk_cum") - col("__rk_cnt"))
+          .drop("__rk_cum")
+        val nv = st0.agg(coalesce(sum(col("__rk_cnt")), lit(0.0)).as("__n_val"))
+        val tot = if (naOption == "keep") nv
+          else df.agg(count(lit(1)).cast("double").as("__n_all")).crossJoin(nv)
+        (df.join(st0, df(c) === col("__rkv"), "left").drop("__rkv")
+           .crossJoin(broadcast(tot)),
+         joinedRank, col("__n_val"), col("__n_all"))
+      } else {
+        val nv = valued.iterator.map(_.getDouble(1)).sum
+        val na = nv + nulls.iterator.map(_.getDouble(1)).sum
+        if (castsExactly(dt) && exactAsDouble(dt, asDouble.iterator))
+          (df, graft.functions.MidrankLookup.midrank(spark, v,
+             asDouble.zip(valued.map(_.getDouble(1).toLong)), ascending),
+           lit(nv), lit(na))
+        else {
+          // driver prefix sums over the bounded sorted counts, shipped
+          // back as a broadcast LocalRelation (the frame never
+          // serializes, only its distinct values do)
+          import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+          var before = 0.0
+          val rows = valued.map { r =>
+            val row = org.apache.spark.sql.Row(r.get(0), r.getDouble(1), before)
+            before += r.getDouble(1); row
+          }
+          val stats = broadcast(spark.createDataFrame(
+            java.util.Arrays.asList(rows: _*),
+            StructType(Seq(cnts.schema.head, // keeps the value type
+              StructField("__rk_cnt", DoubleType),
+              StructField("__rk_before", DoubleType)))))
+          (df.join(stats, df(c) === col("__rkv"), "left").drop("__rkv"),
+           joinedRank, lit(nv), lit(na))
+        }
+      }
+    val nNull = nAll - nVal
     def rankExpr(pct: Boolean): Column = naOption match {
       case "keep" =>
         val r = when(v.isNull, lit(null)).otherwise(base)
-        if (pct) r / col("__n_val") else r
+        if (pct) r / nVal else r
       case "top" =>
         val r = when(v.isNull, (nNull + 1) / 2.0).otherwise(nNull + base)
-        if (pct) r / col("__n_all") else r
+        if (pct) r / nAll else r
       case "bottom" =>
-        val r = when(v.isNull, col("__n_val") + (nNull + 1) / 2.0).otherwise(base)
-        if (pct) r / col("__n_all") else r
+        val r = when(v.isNull, nVal + (nNull + 1) / 2.0).otherwise(base)
+        if (pct) r / nAll else r
       case other => throw new IllegalArgumentException(s"na_option: $other")
     }
-    outs.foldLeft(st) { case (acc, (out, pct)) =>
+    outs.foldLeft(ranked) { case (acc, (out, pct)) =>
       acc.withColumn(out, rankExpr(pct))
-    }.drop("__rk_cnt", "__rk_before", "__rk_dense", "__n_all", "__n_val")
+    }.drop("__rk_cnt", "__rk_before", "__n_all", "__n_val")
+  }
+
+  /** Whether casting `dt` to double keeps distinct values distinct —
+    * the precondition for keying a midrank table on doubles. `LongType`
+    * is admitted here but is only exact below 2^53: callers also check
+    * the probed values with [[exactAsDouble]]. */
+  private[graft] def castsExactly(dt: DataType): Boolean = dt match {
+    case DoubleType | FloatType | IntegerType | LongType | ShortType |
+         ByteType => true
+    case _ => false
+  }
+
+  /** The probed double-cast values of a `dt` column are exact: always,
+    * except a long column holding a value of magnitude ≥ 2^53 (from
+    * there on distinct longs can share one double — 2^53 + 1 rounds to
+    * 2^53). */
+  private[graft] def exactAsDouble(dt: DataType,
+                                   values: Iterator[Double]): Boolean =
+    dt != LongType || values.forall(v => math.abs(v) < 9007199254740992.0)
+
+  /** Catalyst's row estimate for `df`: the statistics' row count when
+    * known, else the size estimate over Spark's own per-row size model
+    * (file-based relations report compressed bytes, so this tends to
+    * undercount). Driver-only — no job. */
+  private[graft] def estimatedRows(df: DataFrame): BigInt = {
+    val p = df.queryExecution.optimizedPlan
+    val st = p.stats
+    st.rowCount.getOrElse(st.sizeInBytes /
+      org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+        .EstimationUtils.getSizePerRow(p.output))
   }
 
   /** Exact global midrank (pandas `rank(method='average')`) of a NUMERIC
@@ -441,7 +457,8 @@ object Reductions {
     *   - midrank = offset + cum − tie + (tie+1)/2, WITHIN the group.
     * NULL cells get a NULL midrank (never a numeric rank), so
     * downstream pairwise-complete correlation masks them like pandas —
-    * the partitionBy(key).orderBy(c) form ranked nulls first.
+    * the partitionBy(key).orderBy(c) form ranked nulls first. A NULL
+    * KEY is its own group (the offsets join is null-safe).
     * `knownCuts` lets callers batch several columns' cut probes into
     * one aggregation job. */
   def withMidrankBy(df: DataFrame, key: String, c: String, out: String,
@@ -462,21 +479,24 @@ object Reductions {
     def bucketOf(v: Column): Column =
       coalesce(graft.functions.BucketBin.bucketBin(v, cuts), lit(0))
     val offs = src.filter(col(c).isNotNull)
-      .groupBy(col(key), bucketOf(col(c)).as("__bkt"))
+      .groupBy(col(key).as("__ok"), bucketOf(col(c)).as("__obkt"))
       .agg(count(lit(1)).cast("double").as("__pn"))
       .withColumn("__off", coalesce(sum(col("__pn")).over(
-        Window.partitionBy(col(key)).orderBy("__bkt")
+        Window.partitionBy(col("__ok")).orderBy("__obkt")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
-      .select(col(key), col("__bkt"), col("__off"))
+      .select(col("__ok"), col("__obkt"), col("__off"))
     val wCum = Window.partitionBy(col(key), col("__bkt")).orderBy(col(c))
     val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
+    // null-safe on the key: a null-key group ranks within itself, like
+    // the (key, bucket) window partitions it
     df.withColumn("__bkt", bucketOf(col(c)))
-      .join(broadcast(offs), Seq(key, "__bkt"), "left")
+      .join(broadcast(offs),
+        col(key) <=> col("__ok") && col("__bkt") === col("__obkt"), "left")
       .withColumn(out, when(col(c).isNotNull,
         col("__off") + count(col(c)).over(wCum).cast("double")
           - count(col(c)).over(wTie)
           + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__bkt", "__off")
+      .drop("__bkt", "__ok", "__obkt", "__off")
   }
 
   /** Default counts-table cap for [[withGroupRankStats]]: the grouped
@@ -520,13 +540,14 @@ object Reductions {
     * NDV(key) × NDV(c) partial rows, NOT the frame — a per-key running
     * offset over that tiny table, and a BROADCAST join-back attaching
     * `rank = offset + (cnt + 1) / 2`. The frame itself is never
-    * shuffled or sorted: this is the grouped twin of the ungrouped
-    * matrix path's rank-stats join ([[rankStatsFromCounts]]), built
-    * distributedly so no driver collect is needed. Midranks are EXACT
+    * shuffled or sorted: this is the in-plan twin of the
+    * [[graft.functions.MidrankLookup]] kernel's driver-built tables,
+    * built distributedly so no driver collect is needed. Midranks are EXACT
     * and identical to [[withMidrankBy]]'s (counts are exact; Spark
     * groups NaN with NaN and orders it greatest, same as the window
-    * sort; -0.0/0.0 normalize in both); NULL cells get NULL (spec +
-    * oracle pin equality). Callers gate on the counts-table size
+    * sort; -0.0/0.0 normalize in both); NULL cells get NULL, and a
+    * NULL key ranks as its own group (null-safe join; spec + oracle
+    * pin equality). Callers gate on the counts-table size
     * ([[groupRankStatsMaxRows]]) — above it, fall back to the bucketed
     * window ([[withMidrankBy]]).
     * `statsSource`: slim (key, c) frame for the counts when `df` is an
@@ -551,7 +572,7 @@ object Reductions {
     val stats = cnts
       .withColumn("__gb", coalesce(sum(col("__gc")).over(wKey), lit(0.0)))
     df.join(broadcast(stats),
-        col(key) === col("__gk") && col(c) === col("__gv"), "left")
+        col(key) <=> col("__gk") && col(c) === col("__gv"), "left")
       .withColumn(out, when(col(c).isNotNull,
         col("__gb") + (col("__gc") + 1) / 2.0))
       .drop("__gk", "__gv", "__gc", "__gb")
@@ -670,8 +691,8 @@ object Reductions {
 
   /** Bounded EXACT histogram aggregate: (value -> count) while the
     * distinct count stays ≤ `cap`; returns null the moment it would
-    * exceed it. Mergeable (map-side combinable, one small map per
-    * partial), state bounded by `cap` entries — so a single aggregation
+    * exceed it. NaN is skipped; -0.0 counts as 0.0. Mergeable (map-side
+    * combinable, one small map per partial), state bounded by `cap` entries — so a single aggregation
     * pass answers "give me the exact value counts IF the column is
     * low-cardinality, else tell me it isn't", without a second scan and
     * without unbounded collect_list state. Overflow is flagged with a
@@ -694,10 +715,14 @@ object Reductions {
                  a: java.lang.Double) = {
         if (a == null || a.isNaN || overflowed(b)) b
         else {
-          val prev = b.get(a)
-          if (prev != null) { b.put(a, prev + 1L); b }
+          // -0.0 counts as 0.0, like Spark's grouping: two boxed keys
+          // would collapse into ONE entry of the Scala result map
+          // (-0.0 == 0.0 there), silently dropping a count
+          val k = if (a == 0.0d) java.lang.Double.valueOf(0.0d) else a
+          val prev = b.get(k)
+          if (prev != null) { b.put(k, prev + 1L); b }
           else if (b.size >= cap) poison(b)
-          else { b.put(a, 1L); b }
+          else { b.put(k, 1L); b }
         }
       }
       def merge(b1: java.util.HashMap[java.lang.Double, java.lang.Long],
@@ -833,10 +858,11 @@ object Reductions {
       .select(explode(col("__mg")).as(Seq("item", "est_count")))
       .orderBy(col("est_count").desc, col("item"))
 
-  /** Rank-stats LocalRelation from DRIVER-SIDE value counts (the shared
-    * finish of [[rankStatsTable]]'s small path and [[boundedHistogram]]
-    * consumers): sorted values -> cnt/before/dense, broadcast for the
-    * join-back. */
+  /** Rank-stats LocalRelation from DRIVER-SIDE value counts: sorted
+    * values -> cnt/before/dense, broadcast for the join-back. For
+    * callers that need more than the average rank (q_rank_methods'
+    * min / max / dense); an average rank alone takes the
+    * [[graft.functions.MidrankLookup]] kernel. */
   def rankStatsFromCounts(spark: org.apache.spark.sql.SparkSession,
                           counts: Seq[(Double, Long)], prefix: String,
                           ascending: Boolean = true): DataFrame = {
@@ -869,49 +895,6 @@ object Reductions {
     broadcast(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
   }
 
-  /** GROUPED analogue of [[rankStatsFromCounts]] (r15): driver-built
-    * per-(key, value) midrank stats from per-key exact value
-    * histograms plus per-key NaN counts, broadcast as a LocalRelation
-    * with [[withGroupRankStats]]'s exact join-back columns
-    * (`__gk` key, `__gv` value, `__gc` count, `__gb` before). Within
-    * each key, before-counts accumulate in ascending value order with
-    * NaN greatest (Spark's sort order; Spark's `===` matches NaN to
-    * NaN, so the NaN stats row joins back) and -0.0 merges into 0.0
-    * (Spark groups/joins them equal — two rows would duplicate
-    * 0.0-valued frame rows through the join). Rank attachment is the
-    * caller's `__gb + (__gc + 1) / 2`, identical to
-    * [[withGroupRankStats]] — but with ZERO in-plan aggregate subtree:
-    * the caller's single probe pass already paid for the counts. */
-  def rankStatsFromGroupCounts(spark: org.apache.spark.sql.SparkSession,
-      keyType: org.apache.spark.sql.types.DataType,
-      perKey: Seq[(Any, Seq[(Double, Long)], Long)]): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val rows = perKey.flatMap { case (k, hist, nanCnt) =>
-      val merged =
-        if (hist.exists(t => t._1 == 0.0 &&
-            java.lang.Double.doubleToRawLongBits(t._1) != 0L))
-          hist.groupBy(t => if (t._1 == 0.0) 0.0 else t._1)
-            .map { case (v, ts) => (v, ts.map(_._2).sum) }.toSeq
-        else hist
-      val sorted = merged.sortBy(_._1) // hist never holds NaN keys
-      var before = 0.0
-      val base = sorted.map { case (v, cnt) =>
-        val r = org.apache.spark.sql.Row(k, v, cnt.toDouble, before)
-        before += cnt; r
-      }
-      if (nanCnt > 0)
-        base :+ org.apache.spark.sql.Row(k, Double.NaN, nanCnt.toDouble, before)
-      else base
-    }
-    broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("__gk", keyType),
-        StructField("__gv", DoubleType),
-        StructField("__gc", DoubleType, nullable = false),
-        StructField("__gb", DoubleType, nullable = false)))))
-  }
-
   /** GROUPED analogue of [[withMidrankFixed]] (r15): per-group midrank
     * of `c` from the caller-probed exact per-(key, fixed-bucket)
     * counts — driver prefix sum per key → broadcast offsets → ONE
@@ -919,7 +902,9 @@ object Reductions {
     * in-plan offsets aggregate (a full pass over the source) and its
     * quantile-cut probe. Values identical to [[withMidrankBy]]: NaN
     * buckets greatest (SortableBucket order = Spark sort order), null
-    * cells rank to null, equal values never split buckets. */
+    * cells rank to null, equal values never split buckets, and the
+    * offsets join is null-safe on the key, so a null-key group ranks
+    * within itself. */
   def withGroupMidrankFixed(df: DataFrame, key: String, c: String,
       out: String, perKey: Seq[(Any, Seq[(Double, Long)])],
       width: Int = 0): DataFrame = {
@@ -943,7 +928,7 @@ object Reductions {
     val withBkt = df
       .withColumn("__fbkt",
         graft.functions.SortableBucket.sortableBucket(col(c)))
-      .join(offs, col(key) === col("__fk") &&
+      .join(offs, col(key) <=> col("__fk") &&
         col("__fbkt") === col("__fbk"), "left")
     val placed =
       if (width > 0) withBkt.repartition(width, col(key), col("__fbkt"))

@@ -20,14 +20,14 @@ object PlanAudit {
     "q_range_join" -> "time-bucketed equi-join (inequality reduced to (key,bucket) hash join)",
     "q_topk_group" -> "WindowGroupLimit pushdown bounds per-group state",
     "q_fingerprint_roll" -> "native rolling-hash expression over the scan, zero shuffle",
-    "q_rank" -> "distributed rank: broadcast LocalRelation stats join — no global sort, no frame-wide shuffle",
-    "q_corr" -> "spearman prestep: broadcast per-value stats join, or (r15) the FIXED-bucket midrank window — per-bucket offsets come straight from the single probe pass (no in-plan offsets subtree, no quantile sketch); no partition-less window",
+    "q_rank" -> "distributed rank: ONE bounded per-value counts probe, then the graft_midrank kernel attaches ranks map-side (totals are driver literals) — no join, no global sort, no frame-wide shuffle",
+    "q_corr" -> "spearman prestep: graft_midrank kernel over the probed per-value counts, or (r15) the FIXED-bucket midrank window — per-bucket offsets come straight from the single probe pass (no in-plan offsets subtree, no quantile sketch); no partition-less window",
     "q_ann_lsh" -> "LSH candidates: bucket equi-join (sub-linear candidate set), WindowGroupLimit top-k",
     "q_decontam" -> "benchmark grams broadcast to the training side; one hash-aggregate by doc",
     "q_pii" -> "regex detect/redact entirely inside the scan projection, zero shuffle",
     "q_pack" -> "packing offsets: value-bucketed prefix sum, tiny partials broadcast, no global sort",
     "q_rank_methods" -> "de-skewed method='first': NO window partitioned by the value alone — row_number runs per (value, tiebreak-bucket), offsets broadcast",
-    "q_corr_matrix" -> "matrix spearman: ONE batched probe (value histograms + fixed-bucket counts, r15), broadcast rank joins + probe-fed fixed-bucket midrank windows, single corr aggregate for all pairs",
+    "q_corr_matrix" -> "matrix spearman: ONE batched probe (value histograms + fixed-bucket counts, r15), graft_midrank kernel lookups + probe-fed fixed-bucket midrank windows, single corr aggregate for all pairs",
     "q_tfidf" -> "BM25/TF-IDF: ONE tokenize (ReusedExchange on the (doc,term) aggregate feeds df/stats/scoring), vocab equi-join (never broadcast), doc-length + top-k share one doc-id window shuffle",
     "q_line_dedup" -> "corpus-wide line dedup: content-keyed map-side-combinable min aggregate, shuffle join-back (AQE skew-safe), per-doc bounded reassembly",
     "q_mixture" -> "temperature resampling: |strata|-row broadcast into a map-side filter — the corpus is never shuffled",
@@ -36,7 +36,7 @@ object PlanAudit {
     "q_semdedup" -> "SemDeDup: zero-shuffle literal-centroid assignment (no id join-back), ONE cluster-keyed shuffle feeds the in-cluster pair join, native codegen dot per pair",
     "q_pq_topk" -> "PQ/ADC: zero-shuffle native-kernel encode (graft_nearest_centroid, r15 — no slice/struct trees), queries broadcast WITH their precomputed ADC lookup tables so scoring reads m cells per pair, WindowGroupLimit top-k",
     "q_resample" -> "resample: ONE map-side-combinable hash aggregate on the period label; calendar-spine gap fill is a broadcast join of bucket-sized frames",
-    "q_corr_pairwise" -> "pairwise-complete corr, 2 jobs total: ONE probe aggregate (pearson cells + pair counts + per-pair masked histograms), then ONE main aggregate over broadcast rank-stats joins evaluates every spearman cell — no per-pair jobs",
+    "q_corr_pairwise" -> "pairwise-complete corr, 2 jobs total: ONE probe aggregate (pearson cells + pair counts + per-pair masked histograms), then ONE main aggregate over graft_midrank kernel lookups evaluates every spearman cell — no per-pair jobs",
     "q_dedup_minhash_incr" -> "incremental LSH: batch signatures map-side, ONE (band,key) equi-join against persisted state — state text never re-shingled",
     "q_nlargest" -> "nlargest/nsmallest: TakeOrderedAndProject (per-task top-n + driver merge), never a global sort",
     "q_bigram_lp" -> "bigram LM: sentinel rows carry unigrams, so uni/tot re-aggregate the vocab-sized bigram table (no extra corpus pass); big-count agg combines map-side (exchange moves distinct bigrams); ONE raw-pair shuffle total (the scoring join)",
@@ -47,9 +47,9 @@ object PlanAudit {
     "q_pagerank" -> "PageRank iteration: persisted edge/outdeg invariants, node-sized rank frame broadcast into the edge join, ONE dst-keyed contrib aggregate per iteration",
     "q_edit_join" -> "edit-distance join: rare-gram prefix-filter equi-join (candidates ~ true pairs, never all-pairs), codegen levenshtein verify",
     "q_groupby_corr" -> "groupby.corr: ONE grouped aggregate carries every matrix cell — map-side-combinable co-moments, one group-key shuffle",
-    "q_groupby_corr_spearman" -> "grouped spearman (r15): ONE grouped probe pass collects per-(key, column) exact value histograms + fixed-bucket counts + NaN counts; every rank attaches via a driver-built broadcast LocalRelation (stats join or per-(key,bucket) offsets + window) — ZERO per-column in-plan aggregate subtrees; one corr aggregate per key",
+    "q_groupby_corr_spearman" -> "grouped spearman: ONE probe job (an Expand of per-column grouping sets under one codegen hash aggregate) counts every exact (key, column, value); every column's rank attaches through the graft_midrank kernel in ONE projection — no join, no window, no broadcast LocalRelation; one corr aggregate per key",
     "q_cut_qcut" -> "cut+qcut: bucketing is a pure codegen when-chain over the scan (edges are driver literals from the eager sort-based quantile probe) — the ONLY exchange is the final presentation sort",
-    "q_corr_matrix_full" -> "full-scale corr matrix: spearman midranks via broadcast rank-stats joins + FIXED-bucket windows whose offsets ride the single probe pass (r15 — the main job scans the base once; no quantile sketch, no offsets subtree), then ONE aggregate evaluates every pearson+spearman cell; above the 64 MB plan-stats gate the midrank sort sizes itself from the probe's own row count (no count() job)",
+    "q_corr_matrix_full" -> "full-scale corr matrix: spearman midranks via graft_midrank kernel lookups + FIXED-bucket windows whose offsets ride the single probe pass (r15 — the main job scans the base once; no quantile sketch, no offsets subtree), then ONE aggregate evaluates every pearson+spearman cell; above the 64 MB plan-stats gate the midrank sort sizes itself from the probe's own row count (no count() job)",
     "q_chunk_sliding" -> "sliding-window chunking: sequence+explode+slice entirely inside the scan — the only exchange is the presentation sort",
     "q_heavy_hitters" -> "Misra-Gries heavy hitters: partial/final ObjectHashAggregate split (k-entry summaries combine map-side), one partials exchange + the k-row sort",
     "q_quantize_int8" -> "int8 quantization: pure codegen transform over the scan, zero shuffle before the presentation sort",

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
+import graft.engine.Reductions
+import org.apache.spark.sql.types.StringType
 
 /** Native vector expressions ([[graft.functions.DotProduct]] /
   * [[graft.functions.L2Norm]]): value parity against the interpreted
@@ -269,5 +271,130 @@ class FunctionsSpec extends SparkSpec {
         SortableBucket.bucketOf(r.getDouble(0), 18),
         s"codegen/eval disagree at ${r.getDouble(0)}")
     }
+  }
+
+  test("MidrankLookup: compiled codegen equals interpreted eval on NaN, " +
+    "-0.0 next to 0.0, nulls and group keys; a missing value throws") {
+    import graft.functions.{MidrankLookup, MidrankTable}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      GenericInternalRow, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.types.{DoubleType, NullType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val oddNaN = java.lang.Double.longBitsToDouble(0x7ff0000000000001L)
+    // group "a": 1.0 x2, -0.0 and 0.0 (one tie group of 3), NaN x2
+    // (greatest, any payload); group null: 5.0 alone
+    val t = MidrankTable.build(Seq(
+      UTF8String.fromString("a") -> Seq(1.0 -> 2L, -0.0 -> 1L, 0.0 -> 2L,
+        Double.NaN -> 1L, oddNaN -> 1L),
+      (null, Seq(5.0 -> 1L))))
+    val bc = spark.sparkContext.broadcast(t)
+    val expr = MidrankLookup(BoundReference(0, DoubleType, nullable = true),
+      BoundReference(1, StringType, nullable = true), bc)
+    // interpreted eval agrees with COMPILED codegen — compiled via
+    // GenerateMutableProjection, which throws on a janino error where a
+    // DataFrame run would fall back to interpreted execution
+    val compiled = GenerateMutableProjection.generate(Seq(expr),
+      useSubexprElimination = false)
+    def row(v: java.lang.Double, k: String) = new GenericInternalRow(
+      Array[Any](v, if (k == null) null else UTF8String.fromString(k)))
+    val cases: Seq[(java.lang.Double, String, Option[Double])] = Seq(
+      (-0.0, "a", Some(2.0)), (0.0, "a", Some(2.0)), (1.0, "a", Some(4.5)),
+      (Double.NaN, "a", Some(6.5)), (oddNaN, "a", Some(6.5)),
+      (null, "a", None), (null, "zz", None), (5.0, null, Some(1.0)))
+    cases.foreach { case (v, k, want) =>
+      val viaEval = Option(expr.eval(row(v, k))).map(_.asInstanceOf[Double])
+      val out = compiled(row(v, k))
+      val viaCodegen = if (out.isNullAt(0)) None else Some(out.getDouble(0))
+      assert(viaEval == want && viaCodegen == want,
+        s"($v, $k): eval $viaEval codegen $viaCodegen want $want")
+    }
+    // a value or key the probe never saw fails loudly on both paths
+    Seq[(java.lang.Double, String)]((2.0, "a"), (1.0, "zz"), (5.0, "a"))
+      .foreach { case (v, k) =>
+        val e1 = intercept[IllegalStateException](expr.eval(row(v, k)))
+        val e2 = intercept[IllegalStateException](compiled(row(v, k)))
+        assert(e1.getMessage.contains("not in the probed table") &&
+          e2.getMessage == e1.getMessage, e1.getMessage)
+      }
+    // ungrouped form: the key is a NullType null literal
+    val u = MidrankLookup(BoundReference(0, DoubleType, nullable = true),
+      Literal(null, NullType), spark.sparkContext.broadcast(
+        MidrankTable.build(Seq((null, Seq(3.0 -> 1L, 7.0 -> 3L))))))
+    val uc = GenerateMutableProjection.generate(Seq(u),
+      useSubexprElimination = false)
+    Seq(3.0 -> 1.0, 7.0 -> 3.0).foreach { case (v, want) =>
+      val in = new GenericInternalRow(Array[Any](v))
+      assert(u.eval(in) == want && uc(in).getDouble(0) == want)
+    }
+    // descending tables accumulate from the greatest value down
+    val d = MidrankTable.build(Seq((null, Seq(3.0 -> 1L, 7.0 -> 3L))),
+      ascending = false)
+    assert(d.midrank(null, 7.0) == 2.0 && d.midrank(null, 3.0) == 4.0)
+  }
+
+  test("MidrankLookup in whole-stage codegen: ungrouped and grouped " +
+    "frames, empty and one-row inputs, missing value fails the job") {
+    import graft.functions.MidrankLookup
+    val src = spark.range(12).select(col("id"),
+      (col("id") % 3).cast("string").as("k"),
+      when(col("id") === 5, lit(null))
+        .when(col("id") === 7, lit(Double.NaN))
+        .when(col("id") === 8, lit(-0.0))
+        .otherwise((col("id") % 4).cast("double")).as("v"))
+    val rows = src.collect()
+    val valued = rows.filter(!_.isNullAt(2))
+    def hist(rs: Array[org.apache.spark.sql.Row]): Seq[(Double, Long)] =
+      rs.map(_.getDouble(2)).toSeq
+        .groupBy(x => java.lang.Double.valueOf(x)) // NaN-safe equality
+        .map { case (x, xs) => (x.doubleValue, xs.size.toLong) }.toSeq
+    val ranked = src.select(col("id"),
+      MidrankLookup.midrank(spark, col("v"), hist(valued)).as("r"),
+      MidrankLookup.midrankBy(spark, col("k"), StringType, col("v"),
+        valued.groupBy(_.getString(1)).toSeq.map { case (k, rs) =>
+          (k: Any, hist(rs)) }).as("rk"))
+    val formatted = ranked.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert(formatted.linesIterator.exists(l =>
+      l.contains("Project") && l.contains("codegen id")), formatted)
+    assert(!formatted.contains("CodegenFallback"), formatted)
+    // references: the window form (pandas average rank) ungrouped, and
+    // a direct count within the group (Spark's order: -0.0 == 0.0,
+    // NaN greatest)
+    val window = src.select(col("id"), Reductions.rankAvg(col("v")).as("r"))
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    def cmp(a: Double, b: Double) = java.lang.Double.compare(
+      graft.functions.MidrankTable.normValue(a),
+      graft.functions.MidrankTable.normValue(b))
+    val byId = rows.map(r => r.getLong(0) -> r).toMap
+    ranked.collect().foreach { r =>
+      val id = r.getLong(0)
+      assert(Option(r.get(1)) == window(id),
+        s"id $id: kernel ${r.get(1)} vs window ${window(id)}")
+      val in = byId(id)
+      val wantK =
+        if (in.isNullAt(2)) None
+        else {
+          val x = in.getDouble(2)
+          val g = valued.filter(_.getString(1) == in.getString(1))
+            .map(_.getDouble(2))
+          Some(g.count(cmp(_, x) < 0) + (g.count(cmp(_, x) == 0) + 1) / 2.0)
+        }
+      assert(Option(r.get(2)) == wantK,
+        s"id $id: grouped kernel ${r.get(2)} vs $wantK")
+    }
+    // empty and one-row frames
+    assert(spark.range(0).select(MidrankLookup.midrank(spark,
+      col("id").cast("double"), Nil)).collect().isEmpty)
+    assert(spark.range(1).select(MidrankLookup.midrank(spark,
+      col("id").cast("double"), Seq(0.0 -> 1L))).collect()
+      .map(_.getDouble(0)).toSeq == Seq(1.0))
+    // a value outside the table fails the job instead of ranking null
+    val e = intercept[Exception](spark.range(3).select(MidrankLookup
+      .midrank(spark, col("id").cast("double"), Seq(0.0 -> 1L, 1.0 -> 1L)))
+      .collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => Option(x.getMessage).exists(
+        _.contains("not in the probed table"))), e.toString)
   }
 }

@@ -768,28 +768,47 @@ class GroupCorrSpec extends SparkSpec {
   test("withGroupRankStats == withMidrankBy midranks exactly (r14 " +
     "grouped rank-stats broadcast path): ties, nulls, per-group ranks") {
     import graft.engine.Reductions
-    // multi-group frame with heavy ties, nulls, and uneven group sizes
+    // multi-group frame with heavy ties, null values, a NULL KEY group,
+    // and uneven group sizes
     val rows = (1 to 5000).map { i =>
-      val k = s"g${i % 7}"
+      val k = if (i % 13 == 0) null else s"g${i % 7}"
       val v: java.lang.Double =
         if (i % 41 == 0) null else (i * 131 % 23).toDouble
       (k, v, i.toLong)
     }
     val df = rows.toDF("k", "v", "id")
-    val a = Reductions.withGroupRankStats(df, "k", "v", "r")
-      .select("id", "r").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .toMap
-    val b = Reductions.withMidrankBy(df, "k", "v", "r", buckets = 8)
-      .select("id", "r").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .toMap
-    assert(a.size == 5000 && b.size == 5000)
-    a.foreach { case (id, ra) =>
-      assert(ra == b(id), s"midrank mismatch at id=$id: $ra vs ${b(id)}")
+    def ranks(d: org.apache.spark.sql.DataFrame, c: String = "r")
+      : Map[Long, Option[Double]] =
+      d.select(col("id"), col(c)).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+        .toMap
+    val b = ranks(Reductions.withMidrankBy(df, "k", "v", "r", buckets = 8))
+    // the fixed-bucket window from exact per-(key, bucket) counts
+    val bucketCounts = df.filter(col("v").isNotNull)
+      .groupBy(col("k"), graft.functions.SortableBucket
+        .sortableBucket(col("v")).cast("double").as("b"))
+      .count().collect().toSeq
+      .groupBy(_.get(0)).toSeq.map { case (k, rs) =>
+        (k, rs.map(r => r.getDouble(1) -> r.getLong(2))) }
+    val variants = Seq(
+      "withGroupRankStats" -> ranks(Reductions.withGroupRankStats(df, "k", "v", "r")),
+      "withGroupMidrankFixed" -> ranks(Reductions.withGroupMidrankFixed(
+        df, "k", "v", "r", bucketCounts)),
+      "kernel (one-shot)" -> ranks(Corr.withGroupMidranks(df, "k", Seq("v"),
+        oneShot = Some(true)), "__mr_v"),
+      "kernel (probe sequence)" -> ranks(Corr.withGroupMidranks(df, "k",
+        Seq("v"), oneShot = Some(false)), "__mr_v"))
+    assert(b.size == 5000)
+    variants.foreach { case (name, a) =>
+      assert(a.size == 5000, name)
+      a.foreach { case (id, ra) =>
+        assert(ra == b(id), s"$name: midrank mismatch at id=$id: $ra vs ${b(id)}")
+      }
     }
-    // nulls rank to null on both paths
-    assert(rows.filter(_._2 == null).forall { case (_, _, id) => a(id).isEmpty })
+    // nulls rank to null; the null-key group ranks within itself
+    assert(rows.filter(_._2 == null).forall { case (_, _, id) => b(id).isEmpty })
+    assert(rows.filter(r => r._1 == null && r._2 != null)
+      .forall { case (_, _, id) => b(id).isDefined })
   }
 
   test("corrMatrixBy spearman: low-NDV columns take the broadcast " +
@@ -823,29 +842,32 @@ class GroupCorrSpec extends SparkSpec {
     }
   }
 
-  test("corrMatrixBy(spearman) grouped-probe regime attaches every rank " +
-    "via a broadcast LocalRelation join — no window, no in-plan " +
-    "aggregate subtree, no frame exchange before the corr agg (r15 pin)") {
-    // low NDV key and values: the grouped probe collects everything and
-    // every column takes the driver-built stats join
-    val df = (1 to 5000).map { i =>
-      (s"g${i % 4}", (i % 7).toDouble, (i * 3 % 11).toDouble)
-    }.toDF("g", "x", "y")
+  test("corrMatrixBy(spearman) one-shot probe ranks every column through " +
+    "the midrank kernel — no join, no window, exactly one aggregate") {
+    import graft.functions.MidrankLookup
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
+      Window => LWin}
+    // low NDV key and values, from a non-local source (a local Seq frame
+    // would be folded into a LocalRelation at plan time, kernel and all)
+    val df = spark.range(1, 5001).select(
+      concat(lit("g"), (col("id") % 4).cast("string")).as("g"),
+      (col("id") % 7).cast("double").as("x"),
+      (col("id") * 3 % 11).cast("double").as("y"))
     val plan = Corr.corrMatrixBy(df, "g", Seq("x", "y"), "spearman")
       .queryExecution.optimizedPlan
-    val s = plan.toString.toLowerCase
-    // rank attachment is the broadcast join-back on (__gk, __gv)
-    assert(s.contains("__gk") && s.contains("localrelation"),
-      "expected the driver-built rank-stats LocalRelation join")
-    // ZERO windows and ZERO aggregates BELOW the final per-key corr
-    // aggregate: a regression to the window path (or to the r14
-    // in-plan stats subtree) re-adds one of these
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWin}
+    // ranks attach in ONE projection of kernel lookups: no stats join
+    // (so no broadcast exchange), no window, and the final per-key corr
+    // aggregate is the only aggregate left in the plan
+    assert(plan.collect { case j: Join => j }.isEmpty,
+      s"expected no join:\n$plan")
     assert(plan.collect { case w: LWin => w }.isEmpty,
-      "grouped-probe regime must not rank via windows")
+      s"expected no window:\n$plan")
     val aggs = plan.collect { case a: Aggregate => a }
     assert(aggs.length == 1,
       s"expected ONLY the final corr aggregate, found ${aggs.length}")
+    val kernels = plan.flatMap(_.expressions.flatMap(_.collect {
+      case m: MidrankLookup => m }))
+    assert(kernels.length == 2, s"expected one kernel per column:\n$plan")
   }
 
   test("grouped rank-stats gate derives from autoBroadcastJoinThreshold " +
@@ -866,25 +888,116 @@ class GroupCorrSpec extends SparkSpec {
       spark.conf.set(key, "-1")
       assert(Reductions.groupRankStatsMaxRows(spark) ===
         Reductions.GroupRankStatsMaxRows)
-      // and the gate only moves PLACEMENT: squeezing every column onto
-      // the bucketed-window fallback leaves each coefficient equal
-      // (midranks are bit-identical — pinned by the sibling spec — the
-      // corr aggregate's float summation order differs by path)
+      // and the gate only moves PLACEMENT: on NaN, -0.0 next to 0.0,
+      // nulls and tie-heavy columns, squeezing every column onto the
+      // bucketed-window fallback leaves every MIDRANK bit-identical, and
+      // each coefficient equal up to the corr aggregate's float
+      // summation order
       val df = (1 to 2000).map { i =>
-        (s"g${i % 3}", (i % 5).toDouble, (i * 7 % 11).toDouble)
-      }.toDF("g", "x", "y")
+        val x: java.lang.Double =
+          if (i % 17 == 0) Double.NaN else if (i % 19 == 0) -0.0
+          else if (i % 23 == 0) null else (i % 5).toDouble
+        (s"g${i % 3}", x, (i * 7 % 11).toDouble, (i % 2).toDouble, i.toLong)
+      }.toDF("g", "x", "y", "z", "id")
+      val cols = Seq("x", "y", "z")
+      def midranks(oneShot: Option[Boolean]) =
+        Corr.withGroupMidranks(df, "g", cols, oneShot)
+          .select(col("id") +: cols.map(c => col(s"__mr_$c")): _*)
+          .collect().map(r => r.getLong(0) -> (1 to 3).map(j =>
+            if (r.isNullAt(j)) None else Some(r.getDouble(j))).toSeq).toMap
+      def cells() = Corr.corrMatrixBy(df, "g", cols, "spearman")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))
+          -> r.getDouble(3)).toMap
       spark.conf.set(key, dflt)
-      val viaStats = Corr.corrMatrixBy(df, "g", Seq("x", "y"), "spearman")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))
-          -> r.getDouble(3)).toMap
+      val viaKernel = midranks(None)             // one-shot probe
+      val viaSequence = midranks(Some(false))    // NDV + grouped probe
+      val viaStats = cells()
       spark.conf.set(key, "160") // cap = 1 row: nothing fits the stats path
-      val viaWindow = Corr.corrMatrixBy(df, "g", Seq("x", "y"), "spearman")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))
-          -> r.getDouble(3)).toMap
-      assert(viaStats.keySet == viaWindow.keySet)
+      val viaWindow = midranks(None)
+      val viaWindowCells = cells()
+      assert(viaKernel.size == 2000)
+      Seq("probe sequence" -> viaSequence, "window" -> viaWindow).foreach {
+        case (name, other) => viaKernel.foreach { case (id, rs) =>
+          assert(rs == other(id), s"$name: midranks differ at id=$id: " +
+            s"$rs vs ${other(id)}")
+        }
+      }
+      // NaN ranks greatest, -0.0 ties with 0.0, null ranks null
+      val xr = viaKernel.map { case (id, rs) => id -> rs.head }
+      assert(xr(23).isEmpty)
+      assert((1L to 2000L).filter(i => i % 3 == 2 && i % 17 != 0)
+        .forall(i => xr(i).forall(_ < xr(17).get)), "NaN must rank greatest")
+      assert(xr(19) == xr(10),
+        "-0.0 (id 19) and 0.0 (id 10, same group) must share a midrank")
+      assert(viaStats.keySet == viaWindowCells.keySet)
       viaStats.foreach { case (k3, v) =>
-        assert(math.abs(v - viaWindow(k3)) < 1e-9,
-          s"gate moved cell $k3: $v vs ${viaWindow(k3)}")
+        assert(math.abs(v - viaWindowCells(k3)) < 1e-9,
+          s"gate moved cell $k3: $v vs ${viaWindowCells(k3)}")
+      }
+    } finally spark.conf.set(key, dflt)
+  }
+
+  test("withGroupMidranks: longs at and above 2^53 never share a kernel " +
+    "table entry — 2^53 and 2^53+1 get distinct midranks, equal to " +
+    "withMidrankBy's, on both probe routes") {
+    import graft.engine.Reductions
+    val big = 9007199254740992L // 2^53: 2^53 + 1 casts to the same double
+    val df = Seq(("a", 1L, 1L), ("a", 2L, 2L), ("a", big, 3L),
+      ("a", big + 1, 4L), ("a", big + 1, 5L), ("b", big + 1, 6L),
+      ("b", 7L, 7L)).toDF("k", "v", "id")
+    def ranks(d: org.apache.spark.sql.DataFrame, c: String) =
+      d.select(col("id"), col(c)).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val want = ranks(Reductions.withMidrankBy(df, "k", "v", "r", buckets = 2), "r")
+    assert(want == Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.5,
+      5L -> 4.5, 6L -> 2.0, 7L -> 1.0))
+    for (oneShot <- Seq(Some(true), Some(false))) {
+      val got = ranks(Corr.withGroupMidranks(df, "k", Seq("v"), oneShot),
+        "__mr_v")
+      assert(got == want, s"oneShot=$oneShot: $got")
+    }
+  }
+
+  test("withGroupMidranks: the regime is chosen per column — columns that " +
+    "fit the gate keep the kernel while another overflows it, on both " +
+    "probe routes, with midranks equal to withMidrankBy's") {
+    import graft.engine.Reductions
+    import graft.functions.MidrankLookup
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWin}
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val dflt = spark.conf.get(key)
+    // x, z: <= 14 (key, value) rows each; y: 120 — with a 50-row gate
+    // the one-shot collect (144 rows) still fits k x gate = 150
+    val df = spark.range(120).select(col("id"),
+      concat(lit("g"), (col("id") % 2).cast("string")).as("g"),
+      (col("id") % 5).cast("double").as("x"),
+      (col("id") * 1.5).as("y"),
+      (col("id") % 7).cast("double").as("z"))
+    val cols = Seq("x", "y", "z")
+    val want = cols.map(c =>
+      Reductions.withMidrankBy(df, "g", c, "r", buckets = 4)
+        .select(col("id"), col("r")).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
+    try {
+      spark.conf.set(key, (50L * 160).toString)
+      assert(Reductions.groupRankStatsMaxRows(spark) == 50L)
+      for (oneShot <- Seq(Some(true), Some(false))) {
+        val out = Corr.withGroupMidranks(df, "g", cols, oneShot)
+        val plan = out.queryExecution.optimizedPlan
+        val kernels = plan.flatMap(_.expressions.flatMap(_.collect {
+          case m: MidrankLookup => m }))
+        assert(kernels.length == 2,
+          s"oneShot=$oneShot: x and z keep the kernel:\n$plan")
+        assert(plan.collect { case w: LWin => w }.nonEmpty,
+          s"oneShot=$oneShot: y ranks through a window:\n$plan")
+        val got = out.select(col("id") +: cols.map(c => col(s"__mr_$c")): _*)
+          .collect()
+        cols.indices.foreach { j =>
+          got.foreach { r =>
+            assert(r.getDouble(j + 1) == want(j)(r.getLong(0)),
+              s"oneShot=$oneShot ${cols(j)} id=${r.getLong(0)}")
+          }
+        }
       }
     } finally spark.conf.set(key, dflt)
   }

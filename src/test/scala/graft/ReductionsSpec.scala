@@ -269,6 +269,59 @@ class ReductionsSpec extends SparkSpec {
     assert(row.isNullAt(1)) // 7 distinct > cap=5 -> null
   }
 
+  test("boundedHistogram: -0.0 and 0.0 share one entry whose count is " +
+    "their sum (Spark's grouping), NaN is skipped") {
+    import spark.implicits._
+    val df = Seq(-0.0, 0.0, 0.0, -0.0, 1.0, Double.NaN).toDF("v").repartition(3)
+    val h = df.agg(Reductions.boundedHistogram(col("v")).as("h"))
+      .collect()(0).getMap[Double, Long](0)
+    assert(h.toMap == Map(0.0 -> 4L, 1.0 -> 1L))
+  }
+
+  test("withRankAvg: the kernel, stats-join and distributed paths equal " +
+    "the window rankAvg on NaN, -0.0, ties and nulls, every na_option") {
+    import spark.implicits._
+    val big = 9007199254740992L // 2^53: longs from here take the join
+    val df = (1 to 400).map { i =>
+      val v: java.lang.Double =
+        if (i % 29 == 0) null else if (i % 31 == 0) Double.NaN
+        else if (i % 37 == 0) -0.0 else (i * 7 % 13).toDouble
+      (i.toLong, v, s"k${i % 17}", big + i % 3)
+    }.toDF("id", "v", "s", "l")
+    def viaWithRank(c: String, asc: Boolean, na: String, small: Int) =
+      Reductions.withRankAvg(df, c, Seq("r" -> false, "p" -> true), asc, na,
+        smallThreshold = small).orderBy("id").select("r", "p").collect()
+        .toSeq.map(r => (optD(r, 0), optD(r, 1)))
+    def viaWindow(c: String, asc: Boolean, na: String) =
+      df.select(col("id"),
+        Reductions.rankAvg(col(c), false, asc, na).as("r"),
+        Reductions.rankAvg(col(c), true, asc, na).as("p"))
+        .orderBy("id").select("r", "p").collect().toSeq
+        .map(r => (optD(r, 0), optD(r, 1)))
+    for (asc <- Seq(true, false); na <- Seq("keep", "top", "bottom")) {
+      val kernel = viaWithRank("v", asc, na, 1000000)
+      // smallThreshold = 1: the distributed prefix-sum join-back
+      assert(kernel == viaWithRank("v", asc, na, 1),
+        s"asc=$asc na=$na: kernel vs distributed join-back")
+      val want = viaWindow("v", asc, na)
+      assertSeqApprox(kernel.map(_._1), want.map(_._1))
+      assertSeqApprox(kernel.map(_._2), want.map(_._2))
+      // strings and longs beyond 2^53 rank through the stats join
+      for (c <- Seq("s", "l")) {
+        val got = viaWithRank(c, asc, na, 1000000)
+        val w = viaWindow(c, asc, na)
+        assertSeqApprox(got.map(_._1), w.map(_._1))
+        assertSeqApprox(got.map(_._2), w.map(_._2))
+      }
+    }
+    // the small numeric path attaches ranks without any join
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val plan = Reductions.withRankAvg(spark.range(50)
+        .select((col("id") % 7).as("v")), "v", Seq("r" -> true), naOption = "top")
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j }.isEmpty, plan.toString)
+  }
+
   test("rankStatsFromCounts: before/cnt/dense from driver counts") {
     val stt = Reductions.rankStatsFromCounts(spark,
       Seq(5.0 -> 2L, 1.0 -> 3L, 9.0 -> 1L), "__rk")
