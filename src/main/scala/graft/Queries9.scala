@@ -115,8 +115,9 @@ object Queries9 {
     }),
 
     // ---- pandas groupby.corr(): per-group correlation matrix, ONE
-    //      grouped aggregate for all cells (pearson) / group-windowed
-    //      midranks feeding the same aggregate (spearman) ----
+    //      grouped aggregate for all cells (pearson) / per-group
+    //      midranks (kernel lookups, or (key, bucket) windows for wide
+    //      columns) feeding the same aggregate (spearman) ----
     "q_groupby_corr" -> ((s, d) => {
       Corr.corrMatrixBy(T(s, d, "lineitem"), "l_returnflag",
           Seq("l_quantity", "l_extendedprice", "l_discount"))

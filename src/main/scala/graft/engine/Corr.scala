@@ -1,8 +1,9 @@
 package graft.engine
 
+import graft.functions.{MidrankLookup, MidrankTable, SortableBucket}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, NullType}
 
 /** Correlation matrices: pearson / spearman / kendall.
   *
@@ -40,12 +41,14 @@ object Corr {
   def kendallCollectMaxRows(k: Int, budgetBytes: Long = 256L << 20): Long =
     budgetBytes / (64L + 48L * k.max(1))
 
-  /** Key-NDV bound for the grouped-probe step of [[withGroupMidranks]]'
-    * probe sequence: at or below it, ONE grouped probe pass collects every column's
-    * per-key exact histograms / fixed-bucket counts (collect memory is
-    * bounded at ~cols × 2 × broadcast-gate entries by the per-key cap)
-    * and every rank attachment is driver-built; above it, the in-plan
-    * per-column machinery keeps the driver safe. */
+  /** Key-NDV bound of [[withGroupMidranks]]' probe sequence: at or
+    * below it, ONE grouped histogram probe collects every column's
+    * per-key exact value and fixed-bucket counts (collect memory is
+    * bounded at ~cols × 2 × broadcast-gate entries by the per-key cap);
+    * above it, only the columns whose NDV(key) × NDV(column) fits the
+    * gate are counted exactly (kernel) and the rest take the quantile
+    * window, so the driver never collects per-key histograms of a
+    * many-key input. */
   private[graft] val GroupedProbeMaxKeys: Long = 1024L
 
   /** Pairwise pearson matrix in long form (c1, c2, corr), upper triangle. */
@@ -65,13 +68,13 @@ object Corr {
     * pearson: ONE grouped aggregate carries all k(k+1)/2 `corr` cells —
     * map-side-combinable co-moments, one shuffle on the group key.
     * spearman: each column midranked WITHIN its group by
-    * [[withGroupMidranks]] — on inputs the broadcast gate admits, ONE
-    * exact (key, column, value) counts probe and the
-    * [[graft.functions.MidrankLookup]] kernel in one projection (no
-    * join, no window); wider columns take (key, fixed-bucket) windows,
-    * never `Window.partitionBy(key)`, so a low-cardinality group key
-    * (l_returnflag: 3 values) never serializes n/3 of the corpus
-    * through one sort task. NULL cells midrank to NULL and are pairwise-
+    * [[withGroupMidranks]] in one of three regimes — the
+    * [[graft.functions.MidrankLookup]] kernel (on inputs the broadcast
+    * gate admits: ONE exact (key, column, value) counts probe and one
+    * projection, no join, no window), a (key, fixed-bucket) window, or
+    * a (key, quantile-bucket) window — never `Window.partitionBy(key)`,
+    * so a low-cardinality group key (l_returnflag: 3 values) never
+    * serializes n/3 of the corpus through one sort task. NULL cells midrank to NULL and are pairwise-
     * masked by the correlation (the old group-window form ranked nulls
     * first, polluting the coefficient). Like [[spearmanMatrix]], ranks
     * are computed per COLUMN (not per pair): on null-laden data this is
@@ -126,68 +129,54 @@ object Corr {
     * ([[Reductions.groupRankStatsMaxRows]]); `oneShot` forces a route
     * (tests):
     *   - ONE-SHOT (estimate ≤ gate, so no column's (key, value) table
-    *     is expected to outgrow the gate): one codegen hash aggregate
-    *     (grouping sets over (key, column)) counts every exact
-    *     (key, column, value) triple, collected under k × gate rows.
-    *     A column with ≤ gate rows ranks through the
-    *     [[graft.functions.MidrankLookup]] kernel; a larger one gets
-    *     its exact per-(key, fixed-bucket) counts summed on the driver
-    *     ([[Reductions.withGroupMidrankFixed]]). A collect that
-    *     overflows k × gate (the estimate was wrong) falls back to the
-    *     sequence below.
-    *   - SEQUENCE (bigger inputs): an approximate-NDV probe; at or
-    *     below [[GroupedProbeMaxKeys]] keys, ONE grouped bounded-
-    *     histogram probe returns per-key exact value and fixed-bucket
-    *     counts (kernel, else fixed-bucket window, else
-    *     [[Reductions.withMidrankBy]]); above it, the in-plan regimes
-    *     ([[Reductions.withGroupRankStats]] / [[Reductions.withMidrankBy]]).
-    * Regimes are chosen per column. Kernel columns need a hashable key
+    *     is expected to outgrow the gate): [[groupValueCounts]] counts
+    *     every exact (key, column, value) triple in one codegen hash
+    *     aggregate. A collect that overflows k × gate rows (the
+    *     estimate was wrong) falls back to the sequence below.
+    *   - SEQUENCE (bigger inputs): an approximate-NDV probe, then
+    *     - at most [[GroupedProbeMaxKeys]] keys: ONE grouped
+    *       [[histogramPlans]] probe (the ungrouped [[rankedFrame]]'s
+    *       probe, keyed);
+    *     - more keys: [[groupValueCounts]] over the columns whose
+    *       NDV(key) × NDV(column) fits the gate; the others take the
+    *       quantile window.
+    * Each column then takes one of three regimes ([[GroupRankPlan]]),
+    * attached by [[attachRanks]]. Kernel columns need a hashable key
     * type and a value type whose double cast is injective; a long
     * column with a probed |value| ≥ 2^53 never takes the kernel. */
   private[graft] def withGroupMidranks(df: DataFrame, key: String,
       cols: Seq[String], oneShot: Option[Boolean] = None): DataFrame = {
-    val spark = df.sparkSession
-    val gate = Reductions.groupRankStatsMaxRows(spark)
-    val keyType = df.schema(key).dataType
-    val kernelOk = graft.functions.MidrankTable.keyTypeSupported(keyType) &&
+    val gate = Reductions.groupRankStatsMaxRows(df.sparkSession)
+    val kernelOk = MidrankTable.keyTypeSupported(df.schema(key).dataType) &&
       cols.forall(c => Reductions.castsExactly(df.schema(c).dataType))
     val probed =
       if (kernelOk && oneShot.getOrElse(
           Reductions.estimatedRows(df.select(key, cols: _*)) <= gate))
         groupValueCounts(df, key, cols, gate)
       else None
-    probed match {
-      case Some(hists) =>
-        attachGroupRanks(df, key, cols, gate, cols.indices.map { i =>
-          val h = hists(i)
-          val rows = h.map(_._2.size).sum
-          if (rows <= gate && Reductions.exactAsDouble(
-              df.schema(cols(i)).dataType, h.iterator.flatMap(_._2.map(_._1))))
-            Kernel(h)
-          else if (rows <= gate) QuantileWindow
-          else FixedBuckets(h.map { case (k, vs) => (k, vs
-            .groupBy(v => graft.functions.SortableBucket.bucketOf(v._1, 18))
-            .map { case (b, bs) => (b.toDouble, bs.map(_._2).sum) }.toSeq) })
-        })
-      case None => probeSequence(df, key, cols, gate, kernelOk)
-    }
+    val plans = probed.map(countPlans(df, cols, gate, _))
+      .getOrElse(sequencePlans(df, key, cols, gate, kernelOk))
+    attachRanks(df, Some(key), cols, cols.map(c => s"__mr_$c"), gate,
+      plans, width = 0)
   }
+
+  /** Exact counts of one column's values (or buckets) per group key. */
+  private type PerKey = Seq[(Any, Seq[(Double, Long)])]
 
   /** Rank regime of one column, decided on the driver from a probe. */
   private sealed trait GroupRankPlan
-  private final case class Kernel(perKey: Seq[(Any, Seq[(Double, Long)])])
-    extends GroupRankPlan
-  private final case class FixedBuckets(perKey: Seq[(Any, Seq[(Double, Long)])])
-    extends GroupRankPlan
+  /** the [[graft.functions.MidrankLookup]] kernel over exact counts */
+  private final case class Kernel(perKey: PerKey) extends GroupRankPlan
+  /** [[Reductions.withGroupMidrankFixed]] over exact bucket counts */
+  private final case class FixedBuckets(perKey: PerKey) extends GroupRankPlan
+  /** [[Reductions.withMidrankBy]], cut points probed at attach time */
   private case object QuantileWindow extends GroupRankPlan
-  private case object InPlanStats extends GroupRankPlan
 
-  /** The one-shot probe: exact (key, value) counts of every column in
-    * ONE hash aggregate (an Expand of k grouping sets), or None when
-    * the result would exceed `k × gate` rows. */
+  /** Exact (key, value) counts of every column in ONE hash aggregate
+    * (an Expand of k grouping sets), or None when the result would
+    * exceed `k × gate` rows. */
   private def groupValueCounts(df: DataFrame, key: String,
-      cols: Seq[String], gate: Long)
-    : Option[IndexedSeq[Seq[(Any, Seq[(Double, Long)])]]] = {
+      cols: Seq[String], gate: Long): Option[IndexedSeq[PerKey]] = {
     val k = cols.size
     val vs = cols.indices.map(i => col(s"__v$i"))
     val slim = df.select(col(key).as("__k") +: cols.zipWithIndex.map {
@@ -213,111 +202,131 @@ object Corr {
     }
   }
 
-  /** The probe sequence for inputs too big for the one-shot probe:
-    * NDV gates, then (few keys) one grouped bounded-histogram probe, or
-    * (many keys) the per-column in-plan regimes. */
-  private def probeSequence(df: DataFrame, key: String, cols: Seq[String],
-      gate: Long, kernelOk: Boolean): DataFrame = {
-    // probe job 1: NDV gates only (key + every column)
-    val probeAggs =
-      approx_count_distinct(col(key)).as("__ndk") +:
-      cols.zipWithIndex.map { case (c, i) =>
-        approx_count_distinct(col(c)).as(s"__nd$i") }
-    val st = df.agg(probeAggs.head, probeAggs.tail: _*).collect()(0)
-    val ndk = st.getLong(st.fieldIndex("__ndk"))
-    def ndc(i: Int): Long = st.getLong(st.fieldIndex(s"__nd$i"))
-    if (ndk <= GroupedProbeMaxKeys && kernelOk) {
-      // probe job 2: ONE grouped pass collects, per key and per column,
-      // the exact value histogram (capped so the whole collect stays
-      // within the broadcast gate), the exact fixed-bucket counts
-      // ([[graft.functions.SortableBucket]]) and the NaN count
-      val capPerKey = math.max(16L, gate / math.max(ndk, 1L)).toInt
-      def fb(c: Column) = graft.functions.SortableBucket
-        .sortableBucket(c.cast("double")).cast("double")
-      val hAggs = cols.zipWithIndex.flatMap { case (c, i) => Seq(
-        Reductions.boundedHistogram(col(c).cast("double"), capPerKey)
-          .as(s"__h$i"),
-        Reductions.boundedHistogram(fb(col(c)), capPerKey)
-          .as(s"__b$i"),
-        count(when(isnan(col(c).cast("double")), 1)).as(s"__nan$i")) }
-      val rowsK = df.groupBy(col(key).as("__k"))
-        .agg(hAggs.head, hAggs.tail: _*).collect().toSeq
-      def histsOf(fld: String): Seq[(Any, Seq[(Double, Long)])] =
-        rowsK.map { r =>
-          val f = r.fieldIndex(fld)
-          (r.get(0), if (r.isNullAt(f)) null
-            else r.getMap[Double, Long](f).toSeq)
-        }
-      attachGroupRanks(df, key, cols, gate, cols.indices.map { i =>
-        val vh = histsOf(s"__h$i"); val bh = histsOf(s"__b$i")
-        val nans = rowsK.map(r => r.getLong(r.fieldIndex(s"__nan$i")))
-        val vhOk = vh.forall(_._2 != null) &&
-          vh.map(_._2.size).sum + nans.count(_ > 0) <= gate &&
-          Reductions.exactAsDouble(df.schema(cols(i)).dataType,
-            vh.iterator.flatMap(_._2.map(_._1)))
-        if (vhOk) Kernel(vh.zip(nans).map { case ((k, h), nc) =>
-          (k, if (nc > 0) h :+ (Double.NaN -> nc) else h) })
-        else if (bh.forall(_._2 != null)) FixedBuckets(bh)
-        else QuantileWindow
-      })
-    } else {
-      // high-NDV-key regime: the per-column in-plan machinery
-      // (grouped stats aggregate / bucketed-window offsets) stays —
-      // those subtrees are what keeps this regime driver-safe.
-      attachGroupRanks(df, key, cols, gate, cols.indices.map { i =>
-        if (ndk * ndc(i) <= gate) InPlanStats else QuantileWindow })
+  /** Regimes from exact (key, value) counts: the kernel while the
+    * column's table fits the gate and its values are exact doubles,
+    * else fixed buckets summed from the same counts. */
+  private def countPlans(df: DataFrame, cols: Seq[String], gate: Long,
+      counts: Seq[PerKey]): Seq[GroupRankPlan] =
+    cols.zip(counts).map { case (c, h) =>
+      if (h.map(_._2.size).sum <= gate && Reductions.exactAsDouble(
+          df.schema(c).dataType, h.iterator.flatMap(_._2.map(_._1))))
+        Kernel(h)
+      else FixedBuckets(h.map { case (k, vs) => (k, vs
+        .groupBy(v => SortableBucket.bucketOf(v._1, 18))
+        .map { case (b, bs) => (b.toDouble, bs.map(_._2).sum) }.toSeq) })
+    }
+
+  /** The probe sequence for inputs too big for the one-shot probe: NDV
+    * gates, then (few keys) one grouped histogram probe, or (many keys)
+    * exact counts of the columns that fit the gate. */
+  private def sequencePlans(df: DataFrame, key: String, cols: Seq[String],
+      gate: Long, kernelOk: Boolean): Seq[GroupRankPlan] = {
+    val nds = (key +: cols).map(c => approx_count_distinct(col(c)))
+    val st = df.agg(nds.head, nds.tail: _*).collect()(0)
+    val ndk = st.getLong(0)
+    if (ndk <= GroupedProbeMaxKeys && kernelOk)
+      histogramPlans(df, Some(key), cols, gate, ndk)._1
+    else {
+      val fit = cols.indices.filter(i => ndk * st.getLong(1 + i) <= gate)
+      val exact = (if (kernelOk && fit.nonEmpty)
+          groupValueCounts(df, key, fit.map(cols), gate) else None)
+        .map(h => fit.zip(countPlans(df, fit.map(cols), gate, h)).toMap)
+        .getOrElse(Map.empty[Int, GroupRankPlan])
+      cols.indices.map(exact.getOrElse(_, QuantileWindow))
     }
   }
 
-  /** Attach every column's midrank by its regime: ALL kernel columns in
-    * one projection, then the window regimes. Window-fallback columns
-    * get their quantile cuts from ONE batched approxQuantile job. */
-  private def attachGroupRanks(df: DataFrame, key: String,
-      cols: Seq[String], gate: Long, plans: Seq[GroupRankPlan]): DataFrame = {
+  /** ONE pass — grouped by `key`, global when there is none — collecting
+    * per key and column the exact value histogram (capped so the whole
+    * collect stays within the gate), the exact fixed-bucket counts
+    * ([[graft.functions.SortableBucket]]) and the NaN count, plus the
+    * row count. A column takes the kernel when every key's histogram
+    * survived and the table fits the gate, else fixed buckets when every
+    * key's bucket counts survived, else the quantile window. Returns the
+    * regimes and the probed row count. */
+  private def histogramPlans(df: DataFrame, key: Option[String],
+      cols: Seq[String], gate: Long, ndk: Long)
+    : (Seq[GroupRankPlan], Long) = {
+    val capPerKey = math.max(16L, gate / math.max(ndk, 1L)).toInt
+    val aggs = count(lit(1)).as("__n") +: cols.zipWithIndex.flatMap {
+      case (c, i) =>
+        val v = col(c).cast("double")
+        Seq(Reductions.boundedHistogram(v, capPerKey).as(s"__h$i"),
+          Reductions.boundedHistogram(
+            SortableBucket.sortableBucket(v).cast("double"), capPerKey)
+            .as(s"__b$i"),
+          count(when(isnan(v), 1)).as(s"__nan$i")) }
+    val rows = df.groupBy(key.map(k => col(k).as("__k")).toSeq: _*)
+      .agg(aggs.head, aggs.tail: _*).collect().toSeq
+    def histsOf(f: String): PerKey = rows.map { r =>
+      val j = r.fieldIndex(f)
+      (if (key.isEmpty) null else r.get(0),
+        if (r.isNullAt(j)) null else r.getMap[Double, Long](j).toSeq)
+    }
+    val plans = cols.indices.map { i =>
+      val vh = histsOf(s"__h$i"); val bh = histsOf(s"__b$i")
+      val nans = rows.map(r => r.getLong(r.fieldIndex(s"__nan$i")))
+      // the value histograms skip NaN: the kernel's table adds it back
+      if (vh.forall(_._2 != null) &&
+          vh.map(_._2.size).sum + nans.count(_ > 0) <= gate &&
+          Reductions.exactAsDouble(df.schema(cols(i)).dataType,
+            vh.iterator.flatMap(_._2.map(_._1))))
+        Kernel(vh.zip(nans).map { case ((k, h), nc) =>
+          (k, if (nc > 0) h :+ (Double.NaN -> nc) else h) })
+      else if (bh.forall(_._2 != null)) FixedBuckets(bh)
+      else QuantileWindow
+    }
+    (plans, rows.map(r => r.getLong(r.fieldIndex("__n"))).sum)
+  }
+
+  /** Attach each column's midrank as `outs(i)` by its regime, within
+    * `key` groups (over the whole frame when there is none): one window
+    * per window-regime column, then ALL kernel columns in one
+    * projection (after the windows, so kernel ranks never ride their
+    * shuffles).
+    * Fixed buckets that would overflow the gate or put more than 20% of
+    * the rows in one (key, bucket) partition take the quantile window;
+    * quantile-window columns get their cut points from ONE batched
+    * approxQuantile job. `width` > 0 sizes the windows' shuffles
+    * ([[Reductions.sortWidth]]). */
+  private def attachRanks(df: DataFrame, key: Option[String],
+      cols: Seq[String], outs: Seq[String], gate: Long,
+      plans: Seq[GroupRankPlan], width: Int): DataFrame = {
     val spark = df.sparkSession
     // floor 2: a defaultParallelism==1 session would degenerate the
-    // fallback bucket count; an extra bucket is placement-only
-    val n = math.max(spark.sparkContext.defaultParallelism, 2)
-    val keyType = df.schema(key).dataType
-    val kernels = cols.zip(plans).collect { case (c, Kernel(perKey)) =>
-      graft.functions.MidrankLookup.midrankBy(spark, col(key), keyType,
-        col(c), perKey).as(s"__mr_$c") }
-    val withKernels =
-      if (kernels.isEmpty) df else df.select(col("*") +: kernels: _*)
-    // window balance: no single (key, bucket) partition may dominate
-    // (same 20% bound as the ungrouped path)
-    def bucketsOk(bh: Seq[(Any, Seq[(Double, Long)])]) =
-      bh.map(_._2.size).sum <= gate &&
-        Reductions.fixedBucketsBalanced(bh.flatMap(_._2))
-    val windowed = cols.indices.filter(i => plans(i) match {
-      case QuantileWindow => true
-      case FixedBuckets(bh) => !bucketsOk(bh)
-      case _ => false
-    })
+    // quantile bucket count; an extra bucket is placement-only
+    val dp = math.max(spark.sparkContext.defaultParallelism, 2)
+    val n = if (width > 0) math.max(dp, math.min(2 * width, 4096)) else dp
+    val regimes = plans.map {
+      case FixedBuckets(bh) if bh.map(_._2.size).sum > gate ||
+          !Reductions.fixedBucketsBalanced(bh.flatMap(_._2)) => QuantileWindow
+      case p => p
+    }
+    val windowed = cols.indices.filter(regimes(_) == QuantileWindow)
     val cuts: Map[Int, Array[Double]] =
       if (windowed.isEmpty) Map.empty
-      else {
-        val probs = (1 until n).map(_.toDouble / n).toArray
-        val slim = df.select(windowed.map(i =>
+      else windowed.zip(df.select(windowed.map(i =>
           col(cols(i)).cast("double").as(s"__qc$i")): _*)
-        val qs = slim.stat.approxQuantile(
-          windowed.map(i => s"__qc$i").toArray, probs, 0.01)
-        windowed.zip(qs.map(_.distinct.sorted)).toMap
-      }
-    val slim = df.select(col(key) +: cols.map(col): _*)
-    cols.zipWithIndex.foldLeft(withKernels) { case (d, (c, i)) =>
-      val out = s"__mr_$c"
-      plans(i) match {
-        case Kernel(_) => d
-        case InPlanStats =>
-          Reductions.withGroupRankStats(d, key, c, out,
-            statsSource = Some(slim))
-        case FixedBuckets(bh) if bucketsOk(bh) =>
-          Reductions.withGroupMidrankFixed(d, key, c, out, bh)
-        case _ => Reductions.withMidrankBy(d, key, c, out, n,
-          knownCuts = Some(cuts(i)), statsSource = Some(slim))
-      }
-    }
+        .stat.approxQuantile(windowed.map(i => s"__qc$i").toArray,
+          (1 until n).map(_.toDouble / n).toArray, 0.01)
+        .map(_.distinct.sorted)).toMap
+    val slim = df.select((key.toSeq ++ cols).map(col): _*)
+    val ranked = cols.indices.foldLeft(df) { (d, i) => regimes(i) match {
+      case Kernel(_) => d
+      case FixedBuckets(bh) => Reductions.withGroupMidrankFixed(d, key,
+        cols(i), outs(i), bh, width)
+      case QuantileWindow => Reductions.withMidrankBy(d, key, cols(i),
+        outs(i), n, knownCuts = Some(cuts(i)), statsSource = Some(slim),
+        width = width)
+    } }
+    val (keyCol, keyType) = key.fold[(Column, DataType)]((lit(null), NullType))(
+      k => (col(k), df.schema(k).dataType))
+    val kernels = cols.indices.flatMap(i => regimes(i) match {
+      case Kernel(perKey) => Some(MidrankLookup.midrankBy(spark, keyCol,
+        keyType, col(cols(i)), perKey).as(outs(i)))
+      case _ => None
+    })
+    if (kernels.isEmpty) ranked else ranked.select(col("*") +: kernels: _*)
   }
 
   /** pandas `groupby(key).corr(method='kendall')` — per-group tau-b
@@ -467,98 +476,30 @@ object Corr {
     one.select(expr(stacked))
   }
 
-  /** Spearman rho for one pair: pearson over average ranks. ONE probe
-    * pass fetches, per column, the EXACT value counts if the column is
-    * low-cardinality (bounded histogram — the whole per-value rank
-    * prestep in a single pass, midrank kernel lookup) AND exact counts
-    * of the FIXED order-preserving bucket
-    * ([[graft.functions.SortableBucket]], r15): a continuous column's
-    * midrank window gets its per-bucket offsets straight from the
-    * probe via [[Reductions.withMidrankFixed]] — no quantile sketch,
-    * no in-plan offsets subtree re-reading the base. One lazy job does
-    * the bucket shuffle(s) and the final corr; no checkpoint, no
-    * frame-sized broadcast, no single-task sort at any cardinality.
-    * A column too concentrated for fixed buckets falls back to
-    * [[Reductions.withMidrank]]'s quantile-cut buckets (placement
-    * only, never rank values).
+  /** Spearman rho for one pair: pearson over average ranks, computed
+    * by [[rankedFrame]] (one probe, then the kernel or a bucketed
+    * midrank window per column) plus one corr aggregate.
     *
-    * Rows where either side is null are excluded up front (pandas
-    * pairwise-complete masking — ranks are computed on the common
-    * subset).
-    *
-    * Like [[rankedFrame]], the continuous-side midrank sort sizes its
-    * OWN shuffle from input volume above the plan-stats gate
-    * ([[Reductions.SortBigBytes]]): same count -> [[Reductions.sortWidth]]
-    * -> explicit repartition, so the single-pair form inherits the
-    * measured sf10 lesson too (width moves placement, never ranks). */
+    * Rows where either side is null or NaN drop before ranking — pandas
+    * masks the pair first and ranks the common rows. `bigBytes`: see
+    * [[rankedFrame]]. */
   def spearman(df: DataFrame, a: String, b: String,
-               bigBytes: Long = Reductions.SortBigBytes): DataFrame = {
-    val spark = df.sparkSession
-    val base = df.filter(col(a).isNotNull && col(b).isNotNull)
-      .select(col(a).cast("double").as("__a"), col(b).cast("double").as("__b"))
-    val dp = math.max(spark.sparkContext.defaultParallelism, 2)
-    val est = base.queryExecution.optimizedPlan.stats.sizeInBytes
-    def fb(c: Column) = graft.functions.SortableBucket
-      .sortableBucket(c).cast("double")
-    val st = base.agg(
-      Reductions.boundedHistogram(col("__a")).as("ha"),
-      Reductions.boundedHistogram(col("__b")).as("hb"),
-      Reductions.boundedHistogram(fb(col("__a"))).as("ba"),
-      Reductions.boundedHistogram(fb(col("__b"))).as("bb"))
-      .collect()(0)
-    def histOf(i: Int): Seq[(Double, Long)] =
-      if (st.isNullAt(i)) null else st.getMap[Double, Long](i).toSeq
-    // width from the probe's own counts — the pairwise-complete base
-    // has no nulls, so a surviving BUCKET histogram (indexes 2-3; NaN
-    // has a bucket, while the value histograms skip NaN) sums to the
-    // row count; a count() job only runs if both poisoned (r15)
-    lazy val probedRows: Long = (2 until 4).iterator
-      .map(st.getMap[Double, Long](_))
-      .collectFirst { case m if m != null => m.values.sum }
-      .getOrElse(base.count())
-    val sortW =
-      if (est < BigInt(bigBytes)) 0
-      else {
-        val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        // ranked frame carries 2 values + 2 ranks + bucket id + offset
-        Reductions.sortWidth(probedRows, 6, session)
-      }
-    // Low-cardinality side: the midrank kernel over the probed
-    // histogram — no shuffle of the frame, no join, no second scan (the
-    // histogram skips NaN, so NaN ranks null as it did under the
-    // former stats join). Continuous side: fixed-bucket midrank window
-    // fed by the probe's exact bucket counts. Both exact.
-    def rankCol(in: DataFrame, c: String, out: String,
-                hist: Seq[(Double, Long)], bcnt: Seq[(Double, Long)])
-      : DataFrame =
-      if (hist != null)
-        in.withColumn(out, graft.functions.MidrankLookup.midrank(spark,
-          when(!isnan(col(c)), col(c)), hist))
-      else if (Reductions.fixedBucketsBalanced(bcnt))
-        Reductions.withMidrankFixed(in, c, out, bcnt, width = sortW)
-      else Reductions.withMidrank(in, c, out,
-        buckets = if (sortW > 0) math.max(dp, math.min(2 * sortW, 4096))
-                  else dp,
-        statsSource = Some(base), width = sortW)
-    val ranked = rankCol(
-      rankCol(base, "__a", "ra", histOf(0), histOf(2)),
-      "__b", "rb", histOf(1), histOf(3))
-    ranked.agg(Core.safeCorr(col("ra"), col("rb")).as("spearman"))
-  }
-
+               bigBytes: Long = Reductions.SortBigBytes): DataFrame =
+    rankedFrame(df, Seq(a, b), bigBytes)._1
+      .agg(Core.safeCorr(col("__r0"), col("__r1")).as("spearman"))
 
   /** Full spearman matrix over `cols`, long form (c1, c2, spearman),
     * upper triangle — pandas `p_corr(method='spearman')` on a k-column
     * frame (`parallel_dataframe.py:285-325`; the reference fans the
     * upper triangle out to a pool, `:279`).
     *
-    * ONE stats job for ALL columns (the batched form of [[spearman]]'s
-    * probe): a single aggregate computes every column's bounded exact
-    * histogram AND its quantile cut points in one pass. Each column is
-    * then ranked ONCE — midrank kernel lookup when low-cardinality,
-    * deterministic-bucket midrank window otherwise — and one final
-    * aggregate evaluates all k(k-1)/2 rank correlations. Total: 1 probe
-    * job + 1 main job, independent of k.
+    * ONE stats job for ALL columns ([[rankedFrame]]'s probe): a single
+    * aggregate computes every column's bounded exact value histogram
+    * AND its fixed-bucket counts in one pass. Each column is then
+    * ranked ONCE — midrank kernel lookup when low-cardinality,
+    * bucketed midrank window otherwise — and one final aggregate
+    * evaluates all k(k-1)/2 rank correlations. Total: 1 probe job + 1
+    * main job, independent of k.
     *
     * Null handling: LISTWISE deletion (rows with a null/NaN in any of
     * `cols` are dropped before ranking) — ranking each column once is
@@ -577,31 +518,23 @@ object Corr {
     one.select(expr(stacked))
   }
 
-  /** Shared prestep of the matrix forms: the listwise-complete frame
-    * with every column's midrank attached (`__c<i>` value, `__r<i>`
-    * rank) after ONE batched stats job, plus the upper-triangle index
-    * pairs.
+  /** Shared prestep of [[spearman]] and the matrix forms: the
+    * listwise-complete frame (`__c<i>` value, `__r<i>` midrank, in that
+    * order) plus the upper-triangle index pairs. Ungrouped rank is
+    * [[withGroupMidranks]]' rank with no key: the same
+    * [[histogramPlans]] probe (ONE job for all columns) picks each
+    * column's regime — the kernel for low-NDV columns (no shuffle of
+    * the frame), else a fixed-bucket window whose offsets come straight
+    * from the probe, else (buckets too imbalanced: >20% of rows in one,
+    * concentration inside ≲2⁻⁶ relative width) the quantile-cut window
+    * — and [[attachRanks]] attaches them.
     *
-    * The probe computes, per column, a bounded exact value histogram
-    * (low-NDV columns rank via the midrank kernel — no shuffle of
-    * the frame) AND exact counts of the FIXED order-preserving bucket
-    * ([[graft.functions.SortableBucket]], r15): a high-NDV column's
-    * midrank window gets its per-bucket offsets straight from the
-    * probe (driver prefix sum over ≤2¹⁸ ids, broadcast back), so the
-    * main job no longer re-evaluates the base inside an offsets
-    * subtree and the probe no longer pays a percentile sketch per
-    * column. A column whose fixed buckets are too imbalanced (>20% of
-    * rows in one bucket — concentration inside ≲2⁻⁶ relative width)
-    * falls back to quantile-cut buckets via [[Reductions.withMidrank]].
-    *
-    * The midrank sort stage sizes its OWN shuffle from input volume
-    * (VERDICT r13 item 1): a plan-stats gate (`bigBytes`, default
-    * [[Reductions.SortBigBytes]]) keeps small inputs on the session
-    * width with zero extra work; above it, one exact `count()` over the
-    * pruned frame (cheap next to the sort it protects) drives
-    * [[Reductions.sortWidth]]. Bucket choice and width affect
-    * placement/balance only, never rank values — pinned by CorrSpec's
-    * forced-big-path equality. */
+    * The window sort sizes its OWN shuffle from input volume (VERDICT
+    * r13 item 1): below a plan-stats gate (`bigBytes`, default
+    * [[Reductions.SortBigBytes]]) small inputs keep the session width;
+    * above it the probe's row count drives [[Reductions.sortWidth]].
+    * Regime, buckets and width affect placement only, never rank
+    * values — pinned by GroupCorrSpec's forced-big-path equality. */
   private[graft] def rankedFrame(df: DataFrame, cols: Seq[String],
       bigBytes: Long = Reductions.SortBigBytes)
     : (DataFrame, Seq[(Int, Int)]) = {
@@ -610,71 +543,19 @@ object Corr {
     require(k >= 2, "corr matrix: need at least two columns")
     val keep = cols.map(c => col(c).isNotNull && !isnan(col(c).cast("double")))
       .reduce(_ && _)
-    val base = df.filter(keep)
-      .select(cols.zipWithIndex.map { case (c, i) =>
-        col(c).cast("double").as(s"__c$i") }: _*)
-    // floor 2: dp==1 would otherwise degenerate the fallback bucket
-    // count below; an extra bucket affects placement only
-    val dp = math.max(spark.sparkContext.defaultParallelism, 2)
-    val est = base.queryExecution.optimizedPlan.stats.sizeInBytes
-    // ONE probe pass, TWO bounded exact aggregates per column (r15):
-    // the value histogram (broadcast rank-stats path, unchanged) and
-    // the counts of the FIXED order-preserving 18-bit bucket
-    // ([[graft.functions.SortableBucket]]). The fixed mapping needs no
-    // cut points, so for a high-NDV column the probe itself yields the
-    // EXACT per-bucket counts the midrank window needs for its offsets
-    // — the former plan re-evaluated the whole base a second time
-    // inside the main job just to aggregate those counts (guide §2.4:
-    // remove the pass outright), and paid a percentile_approx sketch
-    // per column here for cut points the fixed mapping obsoletes.
-    val aggs = (0 until k).flatMap { i =>
-      Seq(Reductions.boundedHistogram(col(s"__c$i")).as(s"h$i"),
-        Reductions.boundedHistogram(graft.functions.SortableBucket
-          .sortableBucket(col(s"__c$i")).cast("double")).as(s"b$i"))
-    }
-    val st = base.agg(aggs.head, aggs.tail: _*).collect()(0)
-    // volume-sized sort width WITHOUT a count() job (r15): the base is
-    // listwise-complete, so any column's surviving histogram sums to
-    // the exact row count; a dedicated count pass only runs in the
-    // (pathological) case where every histogram poisoned
-    lazy val probedRows: Long = (0 until 2 * k).iterator
-      .map(st.getMap[Double, Long](_))
-      .collectFirst { case m if m != null => m.values.sum }
-      .getOrElse(base.count())
-    val sortW =
-      if (est < BigInt(bigBytes)) 0
-      else {
-        val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        // sorted frame carries k values + k ranks + bucket id + offset
-        Reductions.sortWidth(probedRows, 2 * k + 2, session)
-      }
-    var ranked = base
-    for (i <- 0 until k) {
-      val hi = st.fieldIndex(s"h$i"); val bi = st.fieldIndex(s"b$i")
-      val hist: Seq[(Double, Long)] =
-        if (st.isNullAt(hi)) null else st.getMap[Double, Long](hi).toSeq
-      val bcnt: Seq[(Double, Long)] =
-        if (st.isNullAt(bi)) null else st.getMap[Double, Long](bi).toSeq
-      ranked =
-        if (hist != null)
-          ranked.withColumn(s"__r$i", graft.functions.MidrankLookup
-            .midrank(spark, col(s"__c$i"), hist))
-        else if (Reductions.fixedBucketsBalanced(bcnt)) {
-          // driver-built per-bucket offsets (exact counts from the
-          // probe) broadcast back; the window sorts within buckets
-          // only. A column too concentrated for fixed buckets (>20% of
-          // rows in one — ≲2⁻⁶ relative width) takes the quantile-cut
-          // fallback below, which CAN split such a cluster (placement
-          // only, never rank values).
-          Reductions.withMidrankFixed(ranked, s"__c$i", s"__r$i", bcnt,
-            width = sortW)
-        } else Reductions.withMidrank(ranked, s"__c$i", s"__r$i",
-          buckets = if (sortW > 0) math.max(dp, math.min(2 * sortW, 4096))
-                    else dp,
-          statsSource = Some(base.select(col(s"__c$i"))), width = sortW)
-    }
-    val pairs = for { i <- 0 until k; j <- (i + 1) until k } yield (i, j)
-    (ranked, pairs)
+    val vals = cols.indices.map(i => s"__c$i")
+    val outs = cols.indices.map(i => s"__r$i")
+    val base = df.filter(keep).select(cols.zip(vals).map { case (c, v) =>
+      col(c).cast("double").as(v) }: _*)
+    val gate = Reductions.groupRankStatsMaxRows(spark)
+    val (plans, rows) = histogramPlans(base, None, vals, gate, 1L)
+    val width =
+      if (base.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(bigBytes)) 0
+      else Reductions.sortWidth(rows, 2 * k + 2, // values, ranks, bucket, offset
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val ranked = attachRanks(base, None, vals, outs, gate, plans, width)
+      .select((vals ++ outs).map(col): _*)
+    (ranked, for { i <- 0 until k; j <- (i + 1) until k } yield (i, j))
   }
 
   /** Pearson AND spearman matrices in ONE main job (long form: c1, c2,
@@ -782,7 +663,7 @@ object Corr {
             // the kernel sees exactly the masked input its histogram
             // counted: rows outside the pair's mask rank null
             ranked = ranked.withColumn(s"__r${i}_$j",
-              graft.functions.MidrankLookup.midrank(spark,
+              MidrankLookup.midrank(spark,
                 when(col(s"__c$j").isNotNull, col(s"__c$i")), histOf(i, j)))
           }
         val cellAggs = batched.map { case (i, j) =>

@@ -277,134 +277,124 @@ object Reductions {
         .EstimationUtils.getSizePerRow(p.output))
   }
 
-  /** Exact global midrank (pandas `rank(method='average')`) of a NUMERIC
-    * column, attached per row — the scale path for CONTINUOUS /
-    * near-unique columns where a per-value stats table would be
-    * frame-sized.
+  /** Exact average midrank (pandas `rank(method='average')`) of a
+    * numeric column `c` within each `key` group — over the whole frame
+    * when `key` is None — attached per row as `out`: the window regime
+    * for columns whose per-value table is too big for the
+    * [[graft.functions.MidrankLookup]] kernel, with the value axis cut
+    * at quantiles (the fallback when [[withGroupMidrankFixed]]'s fixed
+    * buckets are too imbalanced).
     *
-    * Design: one light job fetches ~`buckets` approximate quantile cut
-    * points; the bucket id is then a PURE FUNCTION OF THE VALUE
-    * (indicator-sum over the cuts), so every plan branch that computes
-    * it agrees by construction — no checkpoint, no sampled range
-    * partitioning to keep aligned (a sampled `repartitionByRange`
-    * evaluated in two branches picks different bounds and silently
-    * mis-offsets ranks). The main job then:
-    *   - per-bucket counts from a slim re-scan (map-side combinable) →
-    *     running offsets via a window over the ~`buckets`-row table,
-    *     broadcast back;
-    *   - within-bucket cumulative + tie counts via windows partitioned
-    *     by bucket (the default ordered-window RANGE frame spans the
-    *     whole tie group; equal values share a bucket by construction);
-    *   - midrank = offset + cum − tie + (tie+1)/2; null values → null.
-    *
-    * `statsSource`: when `df` is itself an expensive plan, pass the
-    * underlying slim frame the cuts/offsets should be computed from (it
-    * must contain the same `c` distribution). Ties all land in one
-    * bucket, so a single dominant value skews its bucket — inherent to
-    * exact tie-aware ranking; bucket counts otherwise balance to ~n/buckets.
-    *
-    * `width`: when > 0, the bucket-partitioned window's shuffle is
-    * explicitly repartitioned to this many partitions (the caller sized
-    * it from input volume via [[sortWidth]]) instead of inheriting the
-    * session width — the window's ClusteredDistribution is satisfied by
-    * the explicit hash exchange, so it is still ONE shuffle, just wide
-    * enough that the per-task sort does not spill. Width only moves
-    * work placement, never values. */
-  def withMidrank(df: DataFrame, c: String, out: String, buckets: Int = 0,
-                  statsSource: Option[DataFrame] = None,
-                  knownCuts: Option[Array[Double]] = None,
-                  width: Int = 0): DataFrame = {
-    val src = statsSource.getOrElse(df).select(col(c))
+    * Never `Window.partitionBy(key).orderBy(c)` — that puts a whole
+    * group (~n/NDV(key) rows) on ONE task when the key is
+    * low-cardinality (`l_returnflag` has 3 values), and is a
+    * partition-less window when there is no key. Instead ~`buckets`
+    * GLOBAL quantile cuts make the bucket id a PURE FUNCTION OF THE
+    * VALUE (a binary search), so every plan branch that computes it
+    * agrees by construction and equal values always share a bucket:
+    *   - per-(key, bucket) counts → per-key running offsets, a window
+    *     over that tiny table, broadcast back;
+    *   - one (key, bucket)-partitioned window adds the within-bucket
+    *     midrank ([[bucketWindowMidrank]]).
+    * `statsSource`: the slim frame to count from when `df` is itself an
+    * expensive plan; it MUST hold the same multiset of (key, c) rows.
+    * `knownCuts` lets callers batch several columns' cut probes into
+    * one job; `width` > 0 sizes the window's shuffle ([[sortWidth]]).
+    * Cuts and width move placement, never values. NULL cells rank
+    * NULL; a NULL key is its own group (the offsets join is null-safe). */
+  def withMidrankBy(df: DataFrame, key: Option[String], c: String,
+                    out: String, buckets: Int = 0,
+                    knownCuts: Option[Array[Double]] = None,
+                    statsSource: Option[DataFrame] = None,
+                    width: Int = 0): DataFrame = {
     val n = if (buckets > 0) buckets
             else df.sparkSession.sparkContext.defaultParallelism
-    // `knownCuts` lets callers batch several columns' cut points into
-    // one aggregation job; cut quality only affects balance, not
-    // correctness.
-    val cuts = knownCuts.getOrElse(src.stat.approxQuantile(
+    val src = statsSource.getOrElse(df)
+    val cuts = knownCuts.getOrElse(src.select(col(c)).stat.approxQuantile(
       c, (1 until n).map(_.toDouble / n).toArray, 0.01)).distinct.sorted
-    // native binary-search expression — O(log cuts)/row in codegen,
-    // same value as the Σ(v > cut) indicator sum
+    // native binary-search expression — O(log cuts)/row in codegen
     def bucketOf(v: Column): Column =
       coalesce(graft.functions.BucketBin.bucketBin(v, cuts), lit(0))
-    val offs = {
-      val partials = src.filter(col(c).isNotNull)
-        .groupBy(bucketOf(col(c)).as("__bkt"))
-        .agg(count(lit(1)).cast("double").as("__pn"))
-      val wOff = Window.orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      partials
-        .withColumn("__off", coalesce(sum(col("__pn")).over(wOff), lit(0.0)))
-        .select(col("__bkt"), col("__off"))
-    }
-    // Both frames share ONE window (same partitioning + ordering -> one
-    // shuffle, one sort, one WindowExec): the default RANGE frame spans
-    // up to and INCLUDING the current tie group; RANGE(0,0) is exactly
-    // the tie group.
-    val wCum = Window.partitionBy("__bkt").orderBy(col(c))
-    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
+    val offs = src.filter(col(c).isNotNull)
+      .groupBy(key.map(k => col(k).as("__ok")).toSeq :+
+        bucketOf(col(c)).as("__obkt"): _*)
+      .agg(count(lit(1)).cast("double").as("__pn"))
+      .withColumn("__off", coalesce(sum(col("__pn")).over(
+        Window.partitionBy(key.map(_ => col("__ok")).toSeq: _*)
+          .orderBy("__obkt").rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0.0)))
+      .drop("__pn")
     val joined = df.withColumn("__bkt", bucketOf(col(c)))
-      .join(broadcast(offs), Seq("__bkt"), "left")
-    val placed =
-      if (width > 0) joined.repartition(width, col("__bkt")) else joined
-    placed
-      .withColumn(out, when(col(c).isNotNull,
-        col("__off") + count(col(c)).over(wCum).cast("double")
-          - count(col(c)).over(wTie)
-          + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__bkt", "__off")
+      .join(broadcast(offs),
+        sameKey(key, "__ok") && col("__bkt") === col("__obkt"), "left")
+    bucketWindowMidrank(joined, key, "__bkt", "__off", c, out, width)
+      .drop("__bkt", "__ok", "__obkt", "__off")
   }
 
-  /** Midrank via the FIXED order-preserving bucket
-    * ([[graft.functions.SortableBucket]], r15) with EXACT per-bucket
-    * counts the caller already probed: a driver prefix sum turns the
-    * counts into per-bucket offsets (LocalRelation, broadcast), the
-    * frame attaches its bucket with one codegen bit-twiddle (no cut
-    * array, no binary search) and one (bucket)-partitioned window adds
-    * the within-bucket midrank. Unlike [[withMidrank]] there is NO
-    * in-plan offsets subtree re-evaluating the source and NO quantile
-    * probe — the caller's single probe pass feeds everything.
-    * `bucketCounts` MUST be the exact (bucketOf(c) → count) histogram
-    * of `df`'s non-null `c` (callers probe it with
-    * [[boundedHistogram]] over the bucket expression); callers gate on
-    * [[fixedBucketsBalanced]] first and fall back to [[withMidrank]]
-    * when a single bucket would dominate the window. Values are exact
-    * and identical to [[withMidrank]]'s on any input — bucket choice
-    * moves placement, never ranks. */
-  def withMidrankFixed(df: DataFrame, c: String, out: String,
-                       bucketCounts: Seq[(Double, Long)],
-                       width: Int = 0): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, IntegerType,
-      StructField, StructType}
-    val spark = df.sparkSession
-    val sorted = bucketCounts.sortBy(_._1)
-    var before = 0.0
-    val rows = sorted.map { case (b, cnt) =>
-      val r = org.apache.spark.sql.Row(b.toInt, before)
-      before += cnt; r
+  /** [[withMidrankBy]] over the FIXED order-preserving bucket
+    * ([[graft.functions.SortableBucket]]) with the EXACT per-(key,
+    * bucket) counts the caller already probed — `perKey`, whose single
+    * key is `null` when `key` is None: a driver prefix sum per key →
+    * broadcast offsets → ONE (key, bucket)-partitioned window. No
+    * quantile probe and no in-plan offsets subtree re-reading the
+    * source. Callers gate on [[fixedBucketsBalanced]] first and fall
+    * back to [[withMidrankBy]] when one bucket would dominate the
+    * window. Values are identical to [[withMidrankBy]]'s: NaN buckets
+    * greatest (SortableBucket order = Spark sort order), NULL cells rank
+    * NULL, equal values never split buckets, a NULL key is its own
+    * group. */
+  def withGroupMidrankFixed(df: DataFrame, key: Option[String], c: String,
+      out: String, perKey: Seq[(Any, Seq[(Double, Long)])],
+      width: Int = 0): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val rows = perKey.flatMap { case (k, bcnt) =>
+      var before = 0.0
+      bcnt.sortBy(_._1).map { case (b, cnt) =>
+        val r = org.apache.spark.sql.Row.fromSeq(
+          key.map(_ => k).toSeq ++ Seq[Any](b.toInt, before))
+        before += cnt; r
+      }
     }
-    val offs = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("__fbk", IntegerType, nullable = false),
-        StructField("__foff", DoubleType, nullable = false)))))
-    val withBkt = df
+    val offs = broadcast(df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), StructType(
+        key.map(k => StructField("__fk", df.schema(k).dataType)).toSeq ++
+        Seq(StructField("__fbk", IntegerType, nullable = false),
+          StructField("__foff", DoubleType, nullable = false)))))
+    val joined = df
       .withColumn("__fbkt",
         graft.functions.SortableBucket.sortableBucket(col(c)))
-      .join(offs, col("__fbkt") === col("__fbk"), "left")
-    val placed =
-      if (width > 0) withBkt.repartition(width, col("__fbkt"))
-      else withBkt
-    val wCum = Window.partitionBy("__fbkt").orderBy(col(c))
-    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
-    placed
-      .withColumn(out, when(col(c).isNotNull,
-        col("__foff") + count(col(c)).over(wCum).cast("double")
-          - count(col(c)).over(wTie)
-          + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__fbkt", "__fbk", "__foff")
+      .join(offs,
+        sameKey(key, "__fk") && col("__fbkt") === col("__fbk"), "left")
+    bucketWindowMidrank(joined, key, "__fbkt", "__foff", c, out, width)
+      .drop("__fbkt", "__fk", "__fbk", "__foff")
   }
 
-  /** Balance gate for [[withMidrankFixed]]: fixed buckets are usable
+  /** The within-bucket half of both window regimes: `off` (the key's
+    * rows in lower buckets) + `cum − tie + (tie + 1) / 2` from ONE
+    * (key, bucket)-partitioned window — the default RANGE frame spans
+    * up to and including the tie group, RANGE(0,0) is the tie group.
+    * NULL `c` ranks NULL. `width` > 0 repartitions to that width first:
+    * the window's distribution is satisfied by that one exchange, so it
+    * is still ONE shuffle, just wide enough not to spill. */
+  private def bucketWindowMidrank(df: DataFrame, key: Option[String],
+      bkt: String, off: String, c: String, out: String,
+      width: Int): DataFrame = {
+    val part = key.map(col).toSeq :+ col(bkt)
+    val placed = if (width > 0) df.repartition(width, part: _*) else df
+    val wCum = Window.partitionBy(part: _*).orderBy(col(c))
+    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
+    placed.withColumn(out, when(col(c).isNotNull,
+      col(off) + count(col(c)).over(wCum).cast("double")
+        - count(col(c)).over(wTie)
+        + (count(col(c)).over(wTie) + 1) / 2.0))
+  }
+
+  /** Null-safe match of `key` against a side table's `other` column;
+    * true when there is no key. */
+  private def sameKey(key: Option[String], other: String): Column =
+    key.fold(lit(true))(k => col(k) <=> col(other))
+
+  /** Balance gate for [[withGroupMidrankFixed]]: fixed buckets are usable
     * when no single bucket holds more than `maxShare` of the rows (the
     * same 20% share bound the PlanGuard skew test enforces on
     * corpus-sized windows). A null histogram (probe overflowed: values
@@ -435,93 +425,33 @@ object Reductions {
     math.max(sessionWidth.toLong, math.min(need, 4096L)).toInt
   }
 
-  /** Plan-stats threshold above which the matrix rank prestep pays one
-    * exact `count()` to size its own sort shuffle ([[sortWidth]]); the
+  /** Plan-stats threshold above which the ungrouped rank prestep sizes
+    * its own sort shuffle ([[sortWidth]]) from its probe's row count; the
     * pruned 4-column lineitem frame measures ~3.7 MB at sf0.1, ~38 MB
     * at sf1 (both healthy at session width) and ~380 MB at sf10 (the
     * measured spill decade), so 64 MB splits the decades cleanly. */
   private[graft] val SortBigBytes: Long = 64L << 20
 
-  /** GROUPED analogue of [[withMidrank]]: per-group average midranks of
-    * `c` without a `Window.partitionBy(key).orderBy(c)` — which puts a
-    * whole group (~n/NDV(key) rows) on ONE task when the group key is
-    * low-cardinality (`l_returnflag` has 3 values; at 100 TB that is a
-    * third of the corpus through one sorter). Instead the value axis is
-    * cut into ~`buckets` GLOBAL quantile buckets (shared across groups —
-    * cut quality affects only balance, never correctness) and the
-    * window partitions by (key, bucket):
-    *   - per-(key,bucket) row counts → per-key running offsets, a
-    *     window over the (NDV(key) × buckets)-row AGGREGATE — bounded;
-    *   - one (key,bucket)-partitioned window gives within-bucket
-    *     cumulative and tie counts (RANGE(0,0) = the tie group);
-    *   - midrank = offset + cum − tie + (tie+1)/2, WITHIN the group.
-    * NULL cells get a NULL midrank (never a numeric rank), so
-    * downstream pairwise-complete correlation masks them like pandas —
-    * the partitionBy(key).orderBy(c) form ranked nulls first. A NULL
-    * KEY is its own group (the offsets join is null-safe).
-    * `knownCuts` lets callers batch several columns' cut probes into
-    * one aggregation job. */
-  def withMidrankBy(df: DataFrame, key: String, c: String, out: String,
-                    buckets: Int = 0,
-                    knownCuts: Option[Array[Double]] = None,
-                    statsSource: Option[DataFrame] = None): DataFrame = {
-    val n = if (buckets > 0) buckets
-            else df.sparkSession.sparkContext.defaultParallelism
-    // `statsSource` (same contract as [[withMidrank]]): the per-(key,
-    // bucket) counts only need (key, c) — pass the slim base frame when
-    // `df` is itself an expensive plan (e.g. already joined to earlier
-    // columns' rank stats), so the offsets aggregate never re-evaluates
-    // those joins. Row multiplicity is identical by construction (rank
-    // joins are 1:1 on (key, value)), so offsets are unchanged.
-    val src = statsSource.getOrElse(df)
-    val cuts = knownCuts.getOrElse(src.select(col(c)).stat.approxQuantile(
-      c, (1 until n).map(_.toDouble / n).toArray, 0.01)).distinct.sorted
-    def bucketOf(v: Column): Column =
-      coalesce(graft.functions.BucketBin.bucketBin(v, cuts), lit(0))
-    val offs = src.filter(col(c).isNotNull)
-      .groupBy(col(key).as("__ok"), bucketOf(col(c)).as("__obkt"))
-      .agg(count(lit(1)).cast("double").as("__pn"))
-      .withColumn("__off", coalesce(sum(col("__pn")).over(
-        Window.partitionBy(col("__ok")).orderBy("__obkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
-      .select(col("__ok"), col("__obkt"), col("__off"))
-    val wCum = Window.partitionBy(col(key), col("__bkt")).orderBy(col(c))
-    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
-    // null-safe on the key: a null-key group ranks within itself, like
-    // the (key, bucket) window partitions it
-    df.withColumn("__bkt", bucketOf(col(c)))
-      .join(broadcast(offs),
-        col(key) <=> col("__ok") && col("__bkt") === col("__obkt"), "left")
-      .withColumn(out, when(col(c).isNotNull,
-        col("__off") + count(col(c)).over(wCum).cast("double")
-          - count(col(c)).over(wTie)
-          + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__bkt", "__ok", "__obkt", "__off")
-  }
-
-  /** Default counts-table cap for [[withGroupRankStats]]: the grouped
-    * rank-stats frame has one row per (group, distinct value) and is
-    * BROADCAST, so the per-column gate is NDV(key) × NDV(c) ≤ this
-    * (≈1.5 MB of (key, value, cnt, before) doubles — same order as the
-    * [[boundedHistogram]] cap the ungrouped matrix path uses). Callers
-    * compare approx_count_distinct PRODUCTS against it (default ~5% rsd
-    * per estimate), so the realized table can exceed the cap by the
-    * combined estimation error — the cap is a sizing target with that
-    * headroom, not a hard bound; the 160 B/row footprint model in
-    * [[groupRankStatsMaxRows]] absorbs it. */
+  /** Default row cap of a broadcast midrank table: a
+    * [[graft.functions.MidrankLookup]] kernel table has one row per
+    * (group, distinct value), a fixed-bucket offsets table one per
+    * (group, bucket), so a column takes either only while that count is
+    * ≤ this (≈1.5 MB of doubles — the default [[boundedHistogram]]
+    * cap). The many-key probe decides which columns to count exactly
+    * from approx_count_distinct PRODUCTS (~5% rsd per estimate); the
+    * exact counts are then re-checked against the cap. */
   private[graft] val GroupRankStatsMaxRows: Long = 65536L
 
   /** Session-adaptive form of the gate (VERDICT r14 item 6): size the
     * counts-table row cap from `spark.sql.autoBroadcastJoinThreshold`
     * so the broadcast stats table never outgrows what the session is
-    * configured to broadcast. 160 B/row is a conservative
-    * HashedRelation footprint for the 4-field row (boxed key +
-    * UnsafeRow + hash-table entry), and intentionally maps the 10 MB
-    * default threshold to exactly [[GroupRankStatsMaxRows]] (65536) so
-    * default-config plans are unchanged. A disabled auto-broadcast
-    * (threshold ≤ 0) falls back to the default cap: the join-back uses
-    * an explicit broadcast() hint, which a -1 threshold does not
-    * disable. */
+    * configured to broadcast. 160 B/row is a conservative footprint for
+    * a 4-field row (boxed key + UnsafeRow + hash-table entry), and
+    * intentionally maps the 10 MB default threshold to exactly
+    * [[GroupRankStatsMaxRows]] (65536). A disabled auto-broadcast
+    * (threshold ≤ 0) falls back to the default cap: the tables ship as
+    * Spark broadcasts or with an explicit broadcast() hint, which a -1
+    * threshold does not disable. */
   private[graft] def groupRankStatsMaxRows(
       spark: org.apache.spark.sql.SparkSession): Long = {
     val s = spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
@@ -535,49 +465,6 @@ object Reductions {
     if (thr <= 0) GroupRankStatsMaxRows else thr / 160L
   }
 
-  /** GROUPED low-cardinality midrank: per-(key, value) counts — ONE
-    * map-side-combinable aggregate whose exchange moves at most
-    * NDV(key) × NDV(c) partial rows, NOT the frame — a per-key running
-    * offset over that tiny table, and a BROADCAST join-back attaching
-    * `rank = offset + (cnt + 1) / 2`. The frame itself is never
-    * shuffled or sorted: this is the in-plan twin of the
-    * [[graft.functions.MidrankLookup]] kernel's driver-built tables,
-    * built distributedly so no driver collect is needed. Midranks are EXACT
-    * and identical to [[withMidrankBy]]'s (counts are exact; Spark
-    * groups NaN with NaN and orders it greatest, same as the window
-    * sort; -0.0/0.0 normalize in both); NULL cells get NULL, and a
-    * NULL key ranks as its own group (null-safe join; spec + oracle
-    * pin equality). Callers gate on the counts-table size
-    * ([[groupRankStatsMaxRows]]) — above it, fall back to the bucketed
-    * window ([[withMidrankBy]]).
-    * `statsSource`: slim (key, c) frame for the counts when `df` is an
-    * expensive plan (same contract as [[withMidrank]]). CONTRACT: the
-    * frame passed MUST be row-for-row equivalent to `df`'s (key, c)
-    * projection — same multiset of (key, c) rows — or the counts (and
-    * therefore every offset and rank) are silently wrong; the callers
-    * here pass the exact slim base the ranked frame was built from
-    * (rank joins are 1:1 on (key, value), so multiplicity is preserved
-    * by construction). */
-  def withGroupRankStats(df: DataFrame, key: String, c: String,
-                         out: String,
-                         statsSource: Option[DataFrame] = None): DataFrame = {
-    val src = statsSource.getOrElse(df)
-    val cnts = src.filter(col(c).isNotNull)
-      .groupBy(col(key).as("__gk"), col(c).as("__gv"))
-      .agg(count(lit(1)).cast("double").as("__gc"))
-    // running offset within each key, over the aggregate only (bounded
-    // by the caller's gate — never the frame)
-    val wKey = Window.partitionBy(col("__gk")).orderBy(col("__gv"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val stats = cnts
-      .withColumn("__gb", coalesce(sum(col("__gc")).over(wKey), lit(0.0)))
-    df.join(broadcast(stats),
-        col(key) <=> col("__gk") && col(c) === col("__gv"), "left")
-      .withColumn(out, when(col(c).isNotNull,
-        col("__gb") + (col("__gc") + 1) / 2.0))
-      .drop("__gk", "__gv", "__gc", "__gb")
-  }
-
   /** Within-tie ordinal — the 1-based position of each row inside its
     * value's tie group under `tiebreak` ordering (what pandas
     * `rank(method='first')` adds on top of the min rank) — WITHOUT a
@@ -587,7 +474,7 @@ object Reductions {
     *
     * Design: the FIRST tiebreak column is cut into ~`buckets` quantile
     * buckets via the same value-deterministic binary-search expression
-    * as [[withMidrank]] (bucket id is a pure function of the value, so
+    * as [[withMidrankBy]] (bucket id is a pure function of the value, so
     * plan branches agree by construction, and bucket order == tiebreak
     * order because equal values always share a bucket). Then:
     *   - per-(value, bucket) counts (map-side combinable) → running
@@ -893,54 +780,6 @@ object Reductions {
       StructField(s"${prefix}_before", DoubleType),
       StructField(s"${prefix}_dense", DoubleType)))
     broadcast(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
-  }
-
-  /** GROUPED analogue of [[withMidrankFixed]] (r15): per-group midrank
-    * of `c` from the caller-probed exact per-(key, fixed-bucket)
-    * counts — driver prefix sum per key → broadcast offsets → ONE
-    * (key, bucket)-partitioned window. Replaces [[withMidrankBy]]'s
-    * in-plan offsets aggregate (a full pass over the source) and its
-    * quantile-cut probe. Values identical to [[withMidrankBy]]: NaN
-    * buckets greatest (SortableBucket order = Spark sort order), null
-    * cells rank to null, equal values never split buckets, and the
-    * offsets join is null-safe on the key, so a null-key group ranks
-    * within itself. */
-  def withGroupMidrankFixed(df: DataFrame, key: String, c: String,
-      out: String, perKey: Seq[(Any, Seq[(Double, Long)])],
-      width: Int = 0): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, IntegerType,
-      StructField, StructType}
-    val spark = df.sparkSession
-    val rows = perKey.flatMap { case (k, bcnt) =>
-      val sorted = bcnt.sortBy(_._1)
-      var before = 0.0
-      sorted.map { case (b, cnt) =>
-        val r = org.apache.spark.sql.Row(k, b.toInt, before)
-        before += cnt; r
-      }
-    }
-    val offs = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("__fk", df.schema(key).dataType),
-        StructField("__fbk", IntegerType, nullable = false),
-        StructField("__foff", DoubleType, nullable = false)))))
-    val withBkt = df
-      .withColumn("__fbkt",
-        graft.functions.SortableBucket.sortableBucket(col(c)))
-      .join(offs, col(key) <=> col("__fk") &&
-        col("__fbkt") === col("__fbk"), "left")
-    val placed =
-      if (width > 0) withBkt.repartition(width, col(key), col("__fbkt"))
-      else withBkt
-    val wCum = Window.partitionBy(col(key), col("__fbkt")).orderBy(col(c))
-    val wTie = wCum.rangeBetween(Window.currentRow, Window.currentRow)
-    placed
-      .withColumn(out, when(col(c).isNotNull,
-        col("__foff") + count(col(c)).over(wCum).cast("double")
-          - count(col(c)).over(wTie)
-          + (count(col(c)).over(wTie) + 1) / 2.0))
-      .drop("__fbkt", "__fk", "__fbk", "__foff")
   }
 
   /** pandas' percentile row label: 0.25 -> "25%", 0.025 -> "2.5%".

@@ -21,13 +21,13 @@ object PlanAudit {
     "q_topk_group" -> "WindowGroupLimit pushdown bounds per-group state",
     "q_fingerprint_roll" -> "native rolling-hash expression over the scan, zero shuffle",
     "q_rank" -> "distributed rank: ONE bounded per-value counts probe, then the graft_midrank kernel attaches ranks map-side (totals are driver literals) — no join, no global sort, no frame-wide shuffle",
-    "q_corr" -> "spearman prestep: graft_midrank kernel over the probed per-value counts, or (r15) the FIXED-bucket midrank window — per-bucket offsets come straight from the single probe pass (no in-plan offsets subtree, no quantile sketch); no partition-less window",
+    "q_corr" -> "spearman prestep = the matrix forms' rankedFrame on the null/NaN-masked pair: ONE probe pass (value histograms, fixed-bucket counts, row count), then graft_midrank kernel lookups or FIXED-bucket midrank windows whose per-bucket offsets come straight from that probe (no in-plan offsets subtree, no quantile sketch); no partition-less window",
     "q_ann_lsh" -> "LSH candidates: bucket equi-join (sub-linear candidate set), WindowGroupLimit top-k",
     "q_decontam" -> "benchmark grams broadcast to the training side; one hash-aggregate by doc",
     "q_pii" -> "regex detect/redact entirely inside the scan projection, zero shuffle",
     "q_pack" -> "packing offsets: value-bucketed prefix sum, tiny partials broadcast, no global sort",
     "q_rank_methods" -> "de-skewed method='first': NO window partitioned by the value alone — row_number runs per (value, tiebreak-bucket), offsets broadcast",
-    "q_corr_matrix" -> "matrix spearman: ONE batched probe (value histograms + fixed-bucket counts, r15), graft_midrank kernel lookups + probe-fed fixed-bucket midrank windows, single corr aggregate for all pairs",
+    "q_corr_matrix" -> "matrix spearman: ONE batched probe (value histograms + fixed-bucket counts + row count, shared with single-pair spearman), graft_midrank kernel lookups + probe-fed fixed-bucket midrank windows, single corr aggregate for all pairs",
     "q_tfidf" -> "BM25/TF-IDF: ONE tokenize (ReusedExchange on the (doc,term) aggregate feeds df/stats/scoring), vocab equi-join (never broadcast), doc-length + top-k share one doc-id window shuffle",
     "q_line_dedup" -> "corpus-wide line dedup: content-keyed map-side-combinable min aggregate, shuffle join-back (AQE skew-safe), per-doc bounded reassembly",
     "q_mixture" -> "temperature resampling: |strata|-row broadcast into a map-side filter — the corpus is never shuffled",

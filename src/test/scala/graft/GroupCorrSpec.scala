@@ -765,8 +765,8 @@ class GroupCorrSpec extends SparkSpec {
       s"single-pair spearman diverged: session-width $small vs forced $big")
   }
 
-  test("withGroupRankStats == withMidrankBy midranks exactly (r14 " +
-    "grouped rank-stats broadcast path): ties, nulls, per-group ranks") {
+  test("grouped midrank regimes == withMidrankBy midranks exactly: " +
+    "ties, nulls, per-group ranks") {
     import graft.engine.Reductions
     // multi-group frame with heavy ties, null values, a NULL KEY group,
     // and uneven group sizes
@@ -782,7 +782,7 @@ class GroupCorrSpec extends SparkSpec {
       d.select(col("id"), col(c)).collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
         .toMap
-    val b = ranks(Reductions.withMidrankBy(df, "k", "v", "r", buckets = 8))
+    val b = ranks(Reductions.withMidrankBy(df, Some("k"), "v", "r", buckets = 8))
     // the fixed-bucket window from exact per-(key, bucket) counts
     val bucketCounts = df.filter(col("v").isNotNull)
       .groupBy(col("k"), graft.functions.SortableBucket
@@ -791,9 +791,8 @@ class GroupCorrSpec extends SparkSpec {
       .groupBy(_.get(0)).toSeq.map { case (k, rs) =>
         (k, rs.map(r => r.getDouble(1) -> r.getLong(2))) }
     val variants = Seq(
-      "withGroupRankStats" -> ranks(Reductions.withGroupRankStats(df, "k", "v", "r")),
       "withGroupMidrankFixed" -> ranks(Reductions.withGroupMidrankFixed(
-        df, "k", "v", "r", bucketCounts)),
+        df, Some("k"), "v", "r", bucketCounts)),
       "kernel (one-shot)" -> ranks(Corr.withGroupMidranks(df, "k", Seq("v"),
         oneShot = Some(true)), "__mr_v"),
       "kernel (probe sequence)" -> ranks(Corr.withGroupMidranks(df, "k",
@@ -948,7 +947,7 @@ class GroupCorrSpec extends SparkSpec {
     def ranks(d: org.apache.spark.sql.DataFrame, c: String) =
       d.select(col("id"), col(c)).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val want = ranks(Reductions.withMidrankBy(df, "k", "v", "r", buckets = 2), "r")
+    val want = ranks(Reductions.withMidrankBy(df, Some("k"), "v", "r", buckets = 2), "r")
     assert(want == Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.5,
       5L -> 4.5, 6L -> 2.0, 7L -> 1.0))
     for (oneShot <- Seq(Some(true), Some(false))) {
@@ -975,7 +974,7 @@ class GroupCorrSpec extends SparkSpec {
       (col("id") % 7).cast("double").as("z"))
     val cols = Seq("x", "y", "z")
     val want = cols.map(c =>
-      Reductions.withMidrankBy(df, "g", c, "r", buckets = 4)
+      Reductions.withMidrankBy(df, Some("g"), c, "r", buckets = 4)
         .select(col("id"), col("r")).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     try {
@@ -1000,5 +999,147 @@ class GroupCorrSpec extends SparkSpec {
         }
       }
     } finally spark.conf.set(key, dflt)
+  }
+
+  /** pandas' average ranks of `vs` (NaN greatest, as Spark sorts it;
+    * no -0.0 in the inputs). Ties are keyed on the bits: NaN != NaN. */
+  private def avgRanks(vs: Seq[Double]): Seq[Double] = {
+    val bits = java.lang.Double.doubleToLongBits _
+    val first = scala.collection.mutable.HashMap.empty[Long, Int]
+    val last = scala.collection.mutable.HashMap.empty[Long, Int]
+    vs.sorted(Ordering.Double.TotalOrdering).zipWithIndex.foreach {
+      case (v, i) =>
+        if (!first.contains(bits(v))) first(bits(v)) = i + 1
+        last(bits(v)) = i + 1
+    }
+    vs.map(v => (first(bits(v)) + last(bits(v))) / 2.0)
+  }
+
+  private def pearson(x: Seq[Double], y: Seq[Double]): Double = {
+    val mx = x.sum / x.size; val my = y.sum / y.size
+    val sxy = x.zip(y).map { case (a, b) => (a - mx) * (b - my) }.sum
+    sxy / math.sqrt(x.map(a => (a - mx) * (a - mx)).sum *
+      y.map(b => (b - my) * (b - my)).sum)
+  }
+
+  test("spearman drops null and NaN rows before ranking (pandas " +
+    "mask-then-rank) on the kernel path and on the window path") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWin}
+    def windows(df: org.apache.spark.sql.DataFrame) =
+      Corr.rankedFrame(df, Seq("a", "b"))._1.queryExecution.optimizedPlan
+        .collect { case w: LWin => w }.size
+    // pandas: a = [1, 2, NaN, 4], b = [1, 2, 3, 4] -> rho = 1.0
+    val small = spark.range(4).select(
+      when(col("id") === 2, lit(Double.NaN))
+        .otherwise(col("id").cast("double") + 1).as("a"),
+      (col("id") + 1).cast("double").as("b"))
+    assert(windows(small) == 0, "the small pair ranks through the kernel")
+    assertApprox(d1(Corr.spearman(small, "a", "b")), Some(1.0), 1e-12)
+    // a: > 65536 distinct values with NaN and null holes -> window;
+    // b: tie pairs and NaN holes in other rows -> kernel
+    val n = 70000
+    val rows = (1 to n).map { i =>
+      val a: java.lang.Double =
+        if (i % 101 == 0) Double.NaN else if (i % 103 == 0) null
+        else (i * 2654435761L % 100003).toDouble + i * 1e-7
+      val b: java.lang.Double =
+        if (i % 107 == 0) Double.NaN else ((i / 2) * 40503L % 99991).toDouble
+      (a, b)
+    }
+    val df = rows.toDF("a", "b")
+    assert(windows(df) > 0, "a continuous column ranks through a window")
+    val kept = rows.filter { case (a, b) =>
+      a != null && !a.isNaN && b != null && !b.isNaN }
+    assert(kept.map(_._1).distinct.size > 65536)
+    val want = pearson(avgRanks(kept.map(_._1.doubleValue)),
+      avgRanks(kept.map(_._2.doubleValue)))
+    assertApprox(d1(Corr.spearman(df, "a", "b")), Some(want), 1e-9)
+  }
+
+  test("withGroupMidranks: above GroupedProbeMaxKeys keys the probe " +
+    "sequence ranks the column that fits the gate through the kernel and " +
+    "the other through a window, midranks equal to a driver reference") {
+    import graft.engine.Reductions
+    import graft.functions.MidrankLookup
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWin}
+    // 1,200 keys (one of them null) x 10 rows; v: 5 values, each twice
+    // per key, with nulls; w: 6,000 values, tie pairs per key, with NaN
+    // and nulls
+    val id = col("id")
+    val df = spark.range(12000).select(id,
+      when(id % 1200 =!= 7, id % 1200).as("k"),
+      when(id % 37 =!= 0, (id / 2400).cast("long") % 5)
+        .cast("double").as("v"),
+      when(id % 53 === 0, lit(Double.NaN)).when(id % 59 =!= 0,
+        ((id / 1200).cast("long") % 5).cast("double") +
+          (id % 1200).cast("double") * 1e-3).as("w"))
+    val gate = Reductions.groupRankStatsMaxRows(spark)
+    val nd = df.agg(approx_count_distinct("k"), approx_count_distinct("v"),
+      approx_count_distinct("w")).collect()(0)
+    assert(nd.getLong(0) > Corr.GroupedProbeMaxKeys)
+    assert(nd.getLong(0) * nd.getLong(1) <= gate, "v fits the gate")
+    assert(nd.getLong(0) * nd.getLong(2) > gate, "w does not")
+    val out = Corr.withGroupMidranks(df, "k", Seq("v", "w"),
+      oneShot = Some(false))
+    val plan = out.queryExecution.optimizedPlan
+    val kernels = plan.flatMap(_.expressions.flatMap(_.collect {
+      case m: MidrankLookup => m }))
+    assert(kernels.length == 1, s"one kernel, for v:\n$plan")
+    assert(plan.collect { case w: LWin => w }.nonEmpty, s"w windows:\n$plan")
+    val got = out.select("id", "k", "v", "w", "__mr_v", "__mr_w").collect()
+    assert(got.length == 12000)
+    def reference(j: Int): Map[Long, Option[Double]] =
+      got.groupBy(r => Option(r.get(1))).values.flatMap { g =>
+        val valued = g.filterNot(_.isNullAt(j))
+        val rs = avgRanks(valued.map(_.getDouble(j)).toSeq)
+        valued.map(_.getLong(0)).zip(rs.map(Some(_))) ++
+          g.filter(_.isNullAt(j)).map(r => r.getLong(0) -> None)
+      }.toMap
+    for ((c, j) <- Seq("v" -> 2, "w" -> 3)) {
+      val want = reference(j)
+      got.foreach { r =>
+        assert(optD(r, j + 2) == want(r.getLong(0)),
+          s"$c id=${r.getLong(0)} key=${r.get(1)}")
+      }
+    }
+  }
+
+  test("edge inputs: empty and one-row frames through spearman, " +
+    "spearmanMatrix and corrMatrixBy(spearman) on both probe routes") {
+    import graft.engine.Reductions
+    val gateKey = "spark.sql.autoBroadcastJoinThreshold"
+    val dflt = spark.conf.get(gateKey)
+    for (n <- Seq(0, 1)) {
+      // a filtered range: its row estimate (4) stays above a 1-row gate
+      val df = spark.range(4).filter(col("id") < n).select(
+        lit("g").as("g"), col("id").cast("double").as("x"),
+        (col("id") * 2).cast("double").as("y"))
+      // one row is too few for a correlation: null, like pandas' NaN
+      assert(Corr.spearman(df, "x", "y").collect().map(optD(_, 0)).toSeq ==
+        Seq(None), s"n=$n")
+      val m = Corr.spearmanMatrix(df, Seq("x", "y")).collect()
+      assert(m.length == 1 && m(0).isNullAt(2), s"n=$n")
+      for (oneShot <- Seq(Some(true), Some(false))) {
+        val mr = Corr.withGroupMidranks(df, "g", Seq("x", "y"), oneShot)
+          .select("__mr_x", "__mr_y").collect()
+          .map(r => (optD(r, 0), optD(r, 1))).toSeq
+        assert(mr == Seq.fill(n)((Some(1.0), Some(1.0))),
+          s"n=$n oneShot=$oneShot: $mr")
+      }
+      val routes = for (gate <- Seq(dflt, "160")) yield {
+        spark.conf.set(gateKey, gate)
+        try {
+          val cells = Corr.corrMatrixBy(df, "g", Seq("x", "y"), "spearman")
+            .collect()
+          assert(cells.length == 3 * n, s"n=$n gate=$gate")
+          assert(cells.forall(_.isNullAt(3)), s"n=$n gate=$gate")
+          // the route corrMatrixBy takes (its one-shot test)
+          Reductions.estimatedRows(df.filter(col("g").isNotNull)
+            .select("g", "x", "y")) <= Reductions.groupRankStatsMaxRows(spark)
+        } finally spark.conf.set(gateKey, dflt)
+      }
+      assert(routes.toSet == Set(true, false),
+        s"n=$n: corrMatrixBy ran one probe route only")
+    }
   }
 }
